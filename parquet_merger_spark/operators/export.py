@@ -12,10 +12,6 @@ ISO-8601 instead.
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
-
 from pyspark.sql import DataFrame
 
 from parquet_merger_spark.functions.strings import is_internal_column
@@ -42,6 +38,8 @@ def export_csv(
     out_path: str,
     single_file: bool = False,
     order_by: list[str] | None = None,
+    *,
+    _narrowed: bool = False,
 ) -> None:
     """Write CSV with header, internal columns dropped, ISO timestamps.
 
@@ -53,7 +51,8 @@ def export_csv(
     ``merge.write_parquet``.  Without it, single-file row order is
     unspecified (repartition(1) fetch order is nondeterministic);
     ``merge_batches`` passes the merged file's row index to keep the CSV
-    in reference order."""
+    in reference order, with ``_narrowed`` set because it has already
+    narrowed that one-file source to one partition."""
     # internal-column drop must not eat the consumed ordering keys
     clean = drop_internal_columns(df, keep=order_by)
     # escape='"' => RFC-4180 doubled inner quotes (reference: escape_csv_field,
@@ -65,17 +64,13 @@ def export_csv(
         "dateFormat": "yyyy-MM-dd",
     }
     if single_file:
-        from parquet_merger_spark.operators.merge import promote_single_file
+        from parquet_merger_spark.operators.merge import write_single_file
 
-        tmp = out_path + "._tmp_single"
         # repartition(1), not coalesce(1) — same rationale as
         # merge.write_parquet: keep the upstream scan parallel and shuffle
         # rows to the single writer instead of serializing the whole read
-        frame = clean.repartition(1)
-        if order_by:
-            frame = frame.sortWithinPartitions(*order_by).drop(*order_by)
-        frame.write.mode("overwrite").options(**opts).csv(tmp)
-        promote_single_file(tmp, out_path, "part-*.csv")
+        frame = clean if _narrowed else clean.repartition(1)
+        write_single_file(frame, out_path, "csv", opts, order_by)
     else:
         writer = (clean.drop(*order_by) if order_by else clean).write.mode(
             "overwrite"

@@ -354,6 +354,25 @@ def promote_single_file(tmp: str, out_path: str, pattern: str) -> None:
     shutil.rmtree(tmp)
 
 
+def write_single_file(
+    frame: DataFrame,
+    out_path: str,
+    fmt: str,
+    options: dict[str, str],
+    order_by: list[str] | None = None,
+) -> None:
+    """Write ``frame`` as exactly one ``fmt`` file at ``out_path`` — the
+    single-file sink of :func:`write_parquet` and ``export.export_csv``.
+    The caller passes a frame already narrowed to one partition.
+    ``order_by`` columns are CONSUMED: the partition is sorted on them
+    (spillable external sort), then they are dropped before the write."""
+    tmp = out_path + "._tmp_single"
+    if order_by:
+        frame = frame.sortWithinPartitions(*order_by).drop(*order_by)
+    frame.write.mode("overwrite").options(**options).format(fmt).save(tmp)
+    promote_single_file(tmp, out_path, f"part-*.{fmt}")
+
+
 def write_parquet(
     df: DataFrame,
     out_path: str,
@@ -387,17 +406,8 @@ def write_parquet(
         raise ValueError("partitioned output is multi-file; drop single_file")
     obs = Observation()
     df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-
-    def _writer(frame: DataFrame):
-        w = frame.write.mode("overwrite")
-        if compression:
-            w = w.option("compression", compression)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        return w
-
+    opts = {"compression": compression} if compression else {}
     if single_file:
-        tmp = out_path + "._tmp_single"
         # repartition(1), NOT coalesce(1): coalesce collapses the WHOLE
         # upstream scan into the single output task — a 4096-small-file
         # compaction read+write measured 6.8s coalesced vs 3.2s
@@ -405,13 +415,12 @@ def write_parquet(
         # parallel and shuffles rows to one writer, which is cheap in
         # exactly the regime where one output file is legitimate (data
         # fits one file)
-        frame = df.repartition(1)
-        if order_by:
-            frame = frame.sortWithinPartitions(*order_by).drop(*order_by)
-        _writer(frame).parquet(tmp)
-        promote_single_file(tmp, out_path, "part-*.parquet")
+        write_single_file(df.repartition(1), out_path, "parquet", opts, order_by)
     else:
-        _writer(df.drop(*order_by) if order_by else df).parquet(out_path)
+        w = (df.drop(*order_by) if order_by else df).write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.options(**opts).parquet(out_path)
     return int(obs.get["rows"])
 
 
@@ -509,6 +518,14 @@ def merge_batches(
     Each batch's jobs run under their own job group, so tallies are
     per-batch even with concurrent batches; the callback fires from
     worker threads and must be thread-safe when ``max_concurrency > 1``.
+
+    Spark jobs per batch of arrow-probed files, ``single_file=True``:
+    the file-sequence mapping's broadcast, the ``repartition(1)``
+    shuffle map, the sorted Parquet write, and with ``csv`` one CSV
+    write (4 jobs).  The CSV re-reads the merged file with the schema
+    just written, so no footer-inference job runs, and narrows it with
+    ``coalesce(1)``, so no shuffle runs.  Directory mode runs the
+    Parquet write and with ``csv`` the CSV write (2 jobs).
     """
     import threading
     import uuid
@@ -572,20 +589,25 @@ def merge_batches(
                 order_by=order_cols,
             )
             if csv:
-                csv_src = spark.read.parquet(out)
+                # re-reading with the schema just written skips the
+                # footer-inference job
+                written = (df.drop(*order_cols) if order_cols else df).schema
+                csv_src = spark.read.schema(written).parquet(out)
                 csv_order = None
                 if single_file:
-                    # the merged file is already in reference order; carry
-                    # its row index through the CSV sink's repartition(1)
+                    # the one file this batch wrote, in reference order:
+                    # coalesce(1) narrows it without a shuffle, and its row
+                    # index keeps that order across read splits
                     csv_src = csv_src.withColumn(
                         ORDER_ROW_COL, F.col("_metadata.row_index")
-                    )
+                    ).coalesce(1)
                     csv_order = [ORDER_ROW_COL]
                 export_csv(
                     csv_src,
                     os.path.join(merged_dir, name + ".csv"),
                     single_file=single_file,
                     order_by=csv_order,
+                    _narrowed=single_file,
                 )
             result = BatchResult(name=plan.name, output_path=out, rows=rows)
         except Exception as exc:  # isolate per-batch failure

@@ -82,8 +82,8 @@ def probe_schema(spark: SparkSession, path: str) -> StructType | None:
     """Footer-only schema probe; None when unreadable
     (reference: src/main.rs:433-437 returns Option).
 
-    ``spark.read.parquet(path).schema`` reads only parquet footers on the
-    driver — no data pages, no executor job.
+    ``spark.read.parquet(path).schema`` reads only parquet footers, no
+    data pages — but Spark's footer inference runs as a one-task job.
     """
     try:
         return spark.read.parquet(path).schema
@@ -94,6 +94,11 @@ def probe_schema(spark: SparkSession, path: str) -> StructType | None:
 class _UnsafeForArrowProbe(Exception):
     """Raised by the arrow->Spark type walk when a type is outside the
     parity-pinned safe set; the caller falls back to the Spark probe."""
+
+
+class _SparkRejectsFile(Exception):
+    """Raised by the arrow probe for a file the Spark probe is known to
+    refuse; the caller answers None without a JVM round trip."""
 
 
 def _arrow_probe_type(t, int96_paths: frozenset[str], path: str):
@@ -108,8 +113,8 @@ def _arrow_probe_type(t, int96_paths: frozenset[str], path: str):
     - tz-naive timestamp (s/ms/us) -> TimestampNTZType (Spark's
       ``inferTimestampNTZ`` default), tz-aware -> TimestampType;
     - ns-unit timestamps: physical INT96 (legacy Spark writers) reads
-      as TimestampType; an INT64 ns annotation makes ``spark.read``
-      itself raise — both only at top level, nested ns is UNSAFE;
+      as TimestampType, top level only; INT64 ns is answered by
+      :func:`_probe_schema_arrow` before this walk, nested ns is UNSAFE;
     - unsigned ints are UNSAFE (Spark widens u8->short, u32->long,
       u64->decimal(20,0); handled by the Spark-probe fallback);
     - every field/element is nullable: Spark's file-source inference
@@ -181,6 +186,9 @@ _SAFE_LEAF_LOGICAL_TYPES = frozenset(
     {"NONE", "STRING", "INT", "DECIMAL", "DATE", "TIMESTAMP"}
 )
 
+# footer key under which Spark's writer stores the Spark schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
 
 def _check_leaf_logical_types(pq_schema) -> None:
     """Raise :class:`_UnsafeForArrowProbe` when any leaf column carries a
@@ -198,7 +206,7 @@ def _check_leaf_logical_types(pq_schema) -> None:
             )
 
 
-def _probe_schema_arrow(path: str) -> StructType:
+def _probe_schema_arrow(path: str, nanos_as_long: bool = False) -> StructType:
     """Footer probe via pyarrow — no JVM round trip (~1 ms vs ~15 ms).
 
     Uses the PARQUET-LEVEL schema (``to_arrow_schema`` on the parquet
@@ -208,7 +216,15 @@ def _probe_schema_arrow(path: str) -> StructType:
     parquet annotations — never would.  Raises on anything it cannot
     map with pinned parity; the caller then falls back to the Spark
     probe, so the fast path can only ever be a byte-identical shortcut.
+
+    A top-level INT64 TIMESTAMP(NANOS) column (pandas' default unit) is
+    answered here: Spark's converter rejects the whole file, so this
+    raises :class:`_SparkRejectsFile`, unless ``nanos_as_long`` (the
+    ``spark.sql.legacy.parquet.nanosAsLong`` conf) maps it to bigint.
+    A footer carrying Spark's own schema takes the fallback instead,
+    since Spark reads that schema rather than converting the columns.
     """
+    import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import types as T
 
@@ -220,11 +236,28 @@ def _probe_schema_arrow(path: str) -> StructType:
         for i in range(len(pq_schema))
         if pq_schema.column(i).physical_type == "INT96"
     )
+    arrow_schema = pq_schema.to_arrow_schema()
+    ns_int64 = {
+        f.name
+        for f in arrow_schema
+        if pa.types.is_timestamp(f.type)
+        and f.type.unit == "ns"
+        and f.name not in int96_paths
+    }
+    if ns_int64:
+        if _SPARK_SCHEMA_KEY in (pf.metadata.metadata or {}):
+            raise _UnsafeForArrowProbe(f"Spark schema in the footer of {path!r}")
+        if not nanos_as_long:
+            raise _SparkRejectsFile(f"INT64 TIMESTAMP(NANOS) in {path!r}")
     fields = [
         T.StructField(
-            f.name, _arrow_probe_type(f.type, int96_paths, f.name), nullable=True
+            f.name,
+            T.LongType()
+            if f.name in ns_int64
+            else _arrow_probe_type(f.type, int96_paths, f.name),
+            nullable=True,
         )
-        for f in pq_schema.to_arrow_schema()
+        for f in arrow_schema
     ]
     return T.StructType(fields)
 
@@ -246,7 +279,9 @@ def probe_schemas(
        the footer in-process (~0.5 ms) with a parity-pinned type
        mapping — any type outside the pinned set, or any read error,
        falls back to the authoritative Spark probe for that file, so
-       results are byte-identical by construction;
+       results are byte-identical by construction; a file the Spark
+       probe is known to refuse (top-level INT64 ns timestamps under
+       default confs) is answered None without it;
     2. a driver thread pool overlaps the probes (arrow IO releases the
        GIL; py4j serves concurrent fallback calls over separate gateway
        connections) — the default up to ``distributed_threshold``;
@@ -270,7 +305,9 @@ def probe_schemas(
     # off, unannotated BYTE_ARRAY -> string, INT96 -> non-timestamp).
     # Under a non-default setting, disable the shortcut: every probe
     # takes the authoritative (still thread-overlapped) Spark path.
-    # nanosAsLong needs no guard — ns is already always-unsafe.
+    # nanosAsLong is passed to the arrow probe instead: it decides
+    # whether a top-level INT64 ns column reads as bigint or makes
+    # Spark refuse the file.
     def _conf(key: str, default: str) -> str:
         try:
             return spark.conf.get(key, default)
@@ -282,11 +319,17 @@ def probe_schemas(
         and _conf("spark.sql.parquet.binaryAsString", "false") == "false"
         and _conf("spark.sql.parquet.int96AsTimestamp", "true") == "true"
     )
+    nanos_as_long = (
+        _conf("spark.sql.legacy.parquet.nanosAsLong", "false").strip().lower()
+        == "true"
+    )
 
     def _probe_one(p: str) -> StructType | None:
         if arrow_ok:
             try:
-                return _probe_schema_arrow(p)
+                return _probe_schema_arrow(p, nanos_as_long)
+            except _SparkRejectsFile:
+                return None
             except Exception:
                 pass
         return probe_schema(spark, p)
@@ -300,13 +343,13 @@ def probe_schemas(
 
     if arrow_ok and len(paths) >= distributed_threshold:
         results: dict[str, StructType | None] = _probe_schemas_distributed(
-            spark, paths
+            spark, paths, nanos_as_long
         )
         # exact parity for the residue: unsafe/unreadable files get the
         # authoritative Spark probe, same as the threaded tier — pooled,
         # since a batch set with (say) one uint column per file would
         # otherwise degrade back to one serial JVM round trip per file
-        residue = [p for p in paths if results.get(p) is None]
+        residue = [p for p in paths if p not in results]
         if residue:
             with ThreadPoolExecutor(max_workers=workers) as pool:
                 probed = pool.map(lambda p: probe_schema(spark, p), residue)
@@ -318,12 +361,14 @@ def probe_schemas(
 
 
 def _probe_schemas_distributed(
-    spark: SparkSession, paths: list[str]
+    spark: SparkSession, paths: list[str], nanos_as_long: bool
 ) -> dict[str, StructType | None]:
     """Executor-side arrow footer probes: path list -> (path, schema
-    JSON) via mapInPandas; None JSON marks unsafe/unreadable files for
-    the caller's Spark-probe fallback.  StructType round-trips its JSON
-    representation exactly (``StructType.fromJson``)."""
+    JSON) via mapInPandas.  A None JSON marks an unsafe/unreadable file,
+    which is left out of the result for the caller's Spark-probe
+    fallback; the JSON ``null`` marks a file Spark is known to refuse,
+    answered None.  StructType round-trips its JSON representation
+    exactly (``StructType.fromJson``)."""
     import pandas as pd  # noqa: F401 — mapInPandas contract
 
     def probe_batches(batches):
@@ -333,7 +378,9 @@ def _probe_schemas_distributed(
             out = []
             for p in pdf["file"]:
                 try:
-                    out.append(_probe_schema_arrow(p).json())
+                    out.append(_probe_schema_arrow(p, nanos_as_long).json())
+                except _SparkRejectsFile:
+                    out.append("null")
                 except Exception:
                     out.append(None)
             yield pd.DataFrame({"file": pdf["file"], "schema_json": out})
@@ -347,11 +394,12 @@ def _probe_schemas_distributed(
     )
     return {
         r["file"]: (
-            StructType.fromJson(json.loads(r["schema_json"]))
-            if r["schema_json"] is not None
-            else None
+            None
+            if r["schema_json"] == "null"
+            else StructType.fromJson(json.loads(r["schema_json"]))
         )
         for r in rows
+        if r["schema_json"] is not None
     }
 
 

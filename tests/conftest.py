@@ -54,3 +54,22 @@ def fixture_dir(tmp_path_factory, spark):
         ),
     }
     return root, files
+
+
+@pytest.fixture
+def jobs_started(spark):
+    """``count(fn)``: how many Spark jobs the application starts while
+    ``fn()`` runs — the status tracker's ungrouped job ids, read after the
+    listener bus has delivered every event."""
+    sc = spark.sparkContext
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    def count(fn) -> int:
+        before = job_ids()
+        fn()
+        return len(job_ids() - before)
+
+    return count

@@ -337,6 +337,84 @@ def test_single_file_output_row_order_is_reference_order(spark, tmp_path):
     assert [r.src for r in seqs] == ["f3", "f2", "f1", "f0"]
 
 
+def _merge_jobs(spark, f, out_dir, jobs_started, single_file):
+    plan = MergePlan(name="jobs", paths=[f["compat_a"], f["compat_b"]])
+
+    def run():
+        res = merge_batches(spark, [plan], out_dir, single_file=single_file, csv=True)
+        assert res[0].ok and res[0].rows == 200
+
+    return jobs_started(run)
+
+
+def test_merge_batches_single_file_job_plan(spark, fixture_dir, tmp_path, jobs_started):
+    """A 2-file single-file batch with CSV runs exactly the 4 jobs
+    merge_batches documents: the file-seq broadcast, the shuffle map, the
+    Parquet write and one CSV write.  The CSV re-reads the merged file
+    with the written schema (no footer-inference job) and narrows it with
+    coalesce(1) (no shuffle)."""
+    _, f = fixture_dir
+    assert _merge_jobs(spark, f, str(tmp_path), jobs_started, True) == 4
+
+
+def test_merge_batches_directory_csv_no_inference_job(
+    spark, fixture_dir, tmp_path, jobs_started
+):
+    """Directory mode runs the Parquet write and the CSV write only: the
+    CSV source is read with the written schema, not by footer inference."""
+    _, f = fixture_dir
+    assert _merge_jobs(spark, f, str(tmp_path), jobs_started, False) == 2
+    back = spark.read.option("header", True).csv(
+        str(tmp_path / "merged" / "jobs.csv")
+    )
+    assert back.columns == ["key", "name", "val"] and back.count() == 200
+
+
+def test_csv_order_across_read_splits(spark, tmp_path):
+    """The CSV keeps reference order when the merged file is read back as
+    several splits: small row groups plus a small maxPartitionBytes put
+    the file's rows in many partitions, which coalesce(1) narrows and the
+    row-index sort puts back in file order."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    files, want = [], []
+    for i in range(3):
+        vals = [(i * 1000 + j) * 7 % 13 for j in range(3000)]
+        pdf = pd.DataFrame({"k": vals, "src": [f"f{i}"] * 3000})
+        p = str(tmp_path / f"split_{i}.parquet")
+        pdf.to_parquet(p, index=False)
+        files.append(p)
+        want.append(pdf)
+    expected = pd.concat(want, ignore_index=True)
+    out_dir = str(tmp_path / "out")
+    merged = os.path.join(out_dir, "merged", "split.parquet")
+
+    confs = {
+        "parquet.block.size": "4096",  # row groups of a few hundred rows
+        "spark.sql.files.maxPartitionBytes": "8192",
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        res = merge_batches(
+            spark, [MergePlan(name="split", paths=files)], out_dir,
+            single_file=True, csv=True,
+        )
+        assert res[0].ok and res[0].rows == 9000
+        assert pq.ParquetFile(merged).num_row_groups > 1
+        assert spark.read.parquet(merged).rdd.getNumPartitions() > 1
+    finally:
+        for k, v in saved.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+
+    got = pd.read_parquet(merged)
+    pd.testing.assert_frame_equal(got, expected)
+    csv = pd.read_csv(os.path.join(out_dir, "merged", "split.csv"))
+    pd.testing.assert_frame_equal(csv, expected, check_dtype=False)
+
+
 def test_single_file_order_with_schema_mismatch_groups(spark, tmp_path):
     """Reference order must hold on the INTERSECTION path too, where files
     with distinct schemas land in different scan groups and plan order

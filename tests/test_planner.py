@@ -1,8 +1,11 @@
 """Catalog + planner tests (SURVEY §2.1 S1-S3, §2.5 A2, EP2)."""
 
 import pandas as pd
+import pytest
 
+from parquet_merger_spark.operators.merge import merged_df
 from parquet_merger_spark.plans.planner import plan_batch, smart_batch
+from parquet_merger_spark.plans.schema import UnreadableSchemaError
 from parquet_merger_spark.sources.catalog import (
     file_catalog_df,
     probe_schema,
@@ -163,17 +166,20 @@ def test_merged_df_names_first_unreadable_in_path_order(spark, tmp_path):
     assert "b_bad.parquet" in str(exc.value)
 
 
-def test_arrow_fast_probe_parity_type_zoo(spark, tmp_path):
+def test_arrow_fast_probe_parity_type_zoo(spark, tmp_path, jobs_started):
     """The arrow fast probe must be a byte-identical shortcut: for every
     type in the zoo — safe-set types mapped directly, unsafe types
-    (unsigned, ns-INT64 timestamps) via the Spark-probe fallback —
-    probe_schemas == probe_schema, including None for files Spark itself
-    refuses (ns-annotated INT64) and for corrupt files."""
+    (unsigned) via the Spark-probe fallback, top-level ns-INT64
+    timestamps answered by the arrow tier itself — probe_schemas ==
+    probe_schema under both nanosAsLong values, including None for files
+    Spark itself refuses (ns-annotated INT64 by default) and for corrupt
+    files."""
     import datetime
     import decimal
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql import types as T
 
     from parquet_merger_spark.sources.catalog import probe_schemas
 
@@ -221,6 +227,18 @@ def test_arrow_fast_probe_parity_type_zoo(spark, tmp_path):
     sch = pa.schema([pa.field("r", pa.int64(), nullable=False)])
     pq.write_table(pa.table({"r": pa.array([1, 2], pa.int64())}).cast(sch), req)
     paths.append(req)
+    # ns-INT64 under a footer that carries Spark's own schema: Spark reads
+    # that schema instead of converting the column, so the arrow tier
+    # must not answer it
+    meta = str(tmp_path / "ts_ns_spark_schema.parquet")
+    spark_schema = T.StructType([T.StructField("t", T.TimestampType())]).json()
+    pq.write_table(
+        pa.table({"t": cases["ts_ns"]}).replace_schema_metadata(
+            {"org.apache.spark.sql.parquet.row.metadata": spark_schema}
+        ),
+        meta,
+    )
+    paths.append(meta)
     # legacy INT96 timestamp (Spark's own writer default)
     int96_dir = str(tmp_path / "int96")
     spark.createDataFrame(
@@ -235,24 +253,42 @@ def test_arrow_fast_probe_parity_type_zoo(spark, tmp_path):
         fh.write(b"nope")
     paths.append(bad)
 
-    fast = probe_schemas(spark, paths)
-    slow = [probe_schema(spark, p) for p in paths]
-    for p, f_, s_ in zip(paths, fast, slow):
-        assert f_ == s_, (p, f_, s_)
-    # ns-INT64 goes through the Spark-probe fallback, whatever that
-    # yields under the session's confs: None (Spark 4 default rejects
-    # TIMESTAMP(NANOS)) or bigint (legacy.parquet.nanosAsLong=true, set
-    # by the oracle suite) — the parity loop above already proved the
-    # fast path matched it either way
-    ns_probe = slow[paths.index(str(tmp_path / "ts_ns.parquet"))]
-    assert ns_probe is None or ns_probe.fields[0].dataType.simpleString() == "bigint"
+    ns_paths = [str(tmp_path / f"{n}.parquet") for n in ("ts_ns", "ts_ns_tz")]
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    saved = spark.conf.get(key, None)
+    try:
+        # ns-INT64 yields what the Spark probe does under each value: None
+        # (Spark 4 rejects TIMESTAMP(NANOS)) or bigint (nanosAsLong=true)
+        for nanos_as_long, ns_type in (("true", "bigint"), ("false", None)):
+            spark.conf.set(key, nanos_as_long)
+            fast = probe_schemas(spark, paths)
+            slow = [probe_schema(spark, p) for p in paths]
+            for p, f_, s_ in zip(paths, fast, slow):
+                assert f_ == s_, (nanos_as_long, p, f_, s_)
+            for p in ns_paths:
+                got = slow[paths.index(p)]
+                assert (got and got.fields[0].dataType.simpleString()) == ns_type
+
+        # under default confs the arrow tier answers ns files with no JVM
+        # probe, and the merge still names the first unreadable file
+        spark.conf.unset(key)
+        got = []
+        assert jobs_started(lambda: got.extend(probe_schemas(spark, ns_paths))) == 0
+        assert got == [None, None]
+        with pytest.raises(UnreadableSchemaError, match="ts_ns.parquet"):
+            merged_df(spark, ns_paths)
+    finally:
+        spark.conf.unset(key) if saved is None else spark.conf.set(key, saved)
 
 
 def test_probe_schemas_distributed_tier_parity(spark, tmp_path):
     """The executor-side probe tier (mapInPandas + schema JSON) must be
     indistinguishable from the threaded tier: same results on a mixed
-    safe/unsafe/corrupt set when the threshold forces the distributed
-    path, including the per-file Spark-probe fallback residue."""
+    safe/unsafe/corrupt/ns-timestamp set when the threshold forces the
+    distributed path, including the per-file Spark-probe fallback
+    residue, under both nanosAsLong values."""
+    import datetime
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -273,12 +309,29 @@ def test_probe_schemas_distributed_tier_parity(spark, tmp_path):
     bad.write_bytes(b"junk")
     paths.insert(4, str(bad))
 
-    via_dist = probe_schemas(spark, paths, distributed_threshold=2)
-    via_threads = probe_schemas(spark, paths, distributed_threshold=10**9)
-    serial = [probe_schema(spark, p) for p in paths]
-    assert via_dist == via_threads == serial
-    assert via_dist[4] is None  # corrupt
-    assert via_dist[2].fields[0].dataType.simpleString() == "decimal(20,0)"  # u64 widened
+    ns = str(tmp_path / "ts_ns.parquet")
+    pq.write_table(
+        pa.table({"t": pa.array([datetime.datetime(2024, 1, 1)], pa.timestamp("ns"))}),
+        ns,
+    )
+    paths.append(ns)
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    saved = spark.conf.get(key, None)
+    try:
+        for nanos_as_long, ns_type in (("false", None), ("true", "bigint")):
+            spark.conf.set(key, nanos_as_long)
+            via_dist = probe_schemas(spark, paths, distributed_threshold=2)
+            via_threads = probe_schemas(spark, paths, distributed_threshold=10**9)
+            serial = [probe_schema(spark, p) for p in paths]
+            assert via_dist == via_threads == serial
+            assert via_dist[4] is None  # corrupt
+            # u64 widened
+            assert via_dist[2].fields[0].dataType.simpleString() == "decimal(20,0)"
+            got = via_dist[-1]
+            assert (got and got.fields[0].dataType.simpleString()) == ns_type
+    finally:
+        spark.conf.unset(key) if saved is None else spark.conf.set(key, saved)
 
 
 def test_arrow_probe_rejects_unpinned_leaf_logical_types(tmp_path):
