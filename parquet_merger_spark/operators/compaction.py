@@ -36,6 +36,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from parquet_merger_spark.sources.catalog import read_parquet_batch
+
 
 @dataclass(frozen=True)
 class CompactionResult:
@@ -184,7 +186,7 @@ def compact_files(
     bytes-per-row ratio per table and apply it at pass 1; recalibration
     here is the bootstrap for first contact with a table."""
     n_out = plan_compaction(paths, target_bytes)
-    df = spark.read.parquet(*paths)
+    df = read_parquet_batch(spark, paths)
     df = df.repartition(n_out) if shuffle else df.coalesce(n_out)
     w = df.write.mode("overwrite")
     if compression:

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from parquet_merger_spark.barrier import materialize, materialize_lazy
 from parquet_merger_spark.partitioning import fan_out
+from parquet_merger_spark.sources.catalog import read_parquet_batch
 
 
 def tokens_col(text: Column | str, sep: str = " ") -> Column:
@@ -741,8 +742,8 @@ def load_gram_index(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
     """(grams, shingle_words) from :func:`write_gram_index` output —
     ``grams`` ready for :func:`contamination_probe`, ``shingle_words``
     so the probe tokenizes identically to the build."""
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    return spark.read.parquet(f"{path}/grams"), int(meta["shingle_words"])
+    meta = read_parquet_batch(spark, [f"{path}/meta"]).collect()[0]
+    return read_parquet_batch(spark, [f"{path}/grams"]), int(meta["shingle_words"])
 
 
 def dup_clusters(

@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from parquet_merger_spark.sources.catalog import read_parquet_batch
+
 QUANT_SCALE = 10_000
 
 
@@ -1612,12 +1614,12 @@ def load_pq_index(spark, path: str) -> tuple[list[list[list[int]]], DataFrame]:
     """(books, codes) from :func:`write_pq_index` output — ``books`` back
     as the plain driver-side model (row -> nested lists), ``codes`` as the
     encoded DataFrame ready for :func:`pq_topk`."""
-    row = spark.read.parquet(f"{path}/books").collect()[0]
+    row = read_parquet_batch(spark, [f"{path}/books"]).collect()[0]
     books = [
         [[int(x) for x in entry["cvec"]] for entry in sub_book]
         for sub_book in row["__books"]
     ]
-    return books, spark.read.parquet(f"{path}/codes")
+    return books, read_parquet_batch(spark, [f"{path}/codes"])
 
 
 def kmeans_lloyd_portable(

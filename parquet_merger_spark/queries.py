@@ -64,6 +64,7 @@ from parquet_merger_spark.operators.textstats import (
 from parquet_merger_spark.operators.export import drop_internal_columns
 from parquet_merger_spark.functions.strings import sanitize_filename_col
 from parquet_merger_spark.session import pin_oracle_confs
+from parquet_merger_spark.sources.catalog import read_parquet_batch
 from parquet_merger_spark.barrier import materialize, materialize_lazy
 from parquet_merger_spark.partitioning import scaled_partitions
 from parquet_merger_spark.streaming.events import (
@@ -110,8 +111,10 @@ def _drain_stream(q, key: str) -> None:
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Fixture table ``name`` under the oracle confs; the read starts no
+    schema-inference job (:func:`read_parquet_batch`)."""
     pin_oracle_confs(spark)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet_batch(spark, [os.path.join(sf_dir, f"{name}.parquet")])
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -84,6 +84,8 @@ def probe_schema(spark: SparkSession, path: str) -> StructType | None:
 
     ``spark.read.parquet(path).schema`` reads only parquet footers, no
     data pages — but Spark's footer inference runs as a one-task job.
+    :func:`read_parquet_batch` is the job-free read: it takes the schema
+    from the arrow footer probe where that is exact.
     """
     try:
         return spark.read.parquet(path).schema
@@ -223,6 +225,10 @@ def _probe_schema_arrow(path: str, nanos_as_long: bool = False) -> StructType:
     ``spark.sql.legacy.parquet.nanosAsLong`` conf) maps it to bigint.
     A footer carrying Spark's own schema takes the fallback instead,
     since Spark reads that schema rather than converting the columns.
+    For the same reason any Spark-written footer whose stored schema
+    (made nullable, as Spark's read makes it) differs from the converted
+    one raises :class:`_UnsafeForArrowProbe`: intervals, for one, are
+    stored as plain ints, and field metadata has no parquet form.
     """
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -259,7 +265,60 @@ def _probe_schema_arrow(path: str, nanos_as_long: bool = False) -> StructType:
         )
         for f in arrow_schema
     ]
-    return T.StructType(fields)
+    schema = T.StructType(fields)
+    stored = (pf.metadata.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if stored is not None and _as_nullable(
+        StructType.fromJson(json.loads(stored))
+    ) != schema:
+        raise _UnsafeForArrowProbe(f"Spark schema in the footer of {path!r} differs")
+    return schema
+
+
+def _as_nullable(t):
+    """Spark's ``DataType.asNullable``: every field, element and map
+    value nullable, metadata kept."""
+    from pyspark.sql import types as T
+
+    if isinstance(t, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
+
+
+def _conf(spark: SparkSession, key: str, default: str) -> str:
+    try:
+        return spark.conf.get(key, default)
+    except Exception:
+        return default
+
+
+def _arrow_probe_confs(spark: SparkSession) -> tuple[bool, bool]:
+    """``(arrow_ok, nanos_as_long)`` for the arrow footer probe.
+
+    The arrow tier's parity is pinned under Spark's DEFAULT parquet
+    reader confs; each of the three checked here changes what the Spark
+    probe reports for some type (tz-naive -> TimestampType when NTZ
+    inference is off, unannotated BYTE_ARRAY -> string, INT96 ->
+    non-timestamp), so under a non-default value ``arrow_ok`` is False
+    and every probe takes the authoritative Spark path.  nanosAsLong is
+    passed to the arrow probe instead: it decides whether a top-level
+    INT64 ns column reads as bigint or makes Spark refuse the file.
+    """
+    arrow_ok = (
+        _conf(spark, "spark.sql.parquet.inferTimestampNTZ.enabled", "true") == "true"
+        and _conf(spark, "spark.sql.parquet.binaryAsString", "false") == "false"
+        and _conf(spark, "spark.sql.parquet.int96AsTimestamp", "true") == "true"
+    )
+    nanos_as_long = (
+        _conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "false").strip().lower()
+        == "true"
+    )
+    return arrow_ok, nanos_as_long
 
 
 def probe_schemas(
@@ -299,30 +358,7 @@ def probe_schemas(
     if not paths:
         return []
 
-    # The arrow tier's parity is pinned under Spark's DEFAULT parquet
-    # reader confs; each of these changes what the Spark probe reports
-    # for some type (tz-naive -> TimestampType when NTZ inference is
-    # off, unannotated BYTE_ARRAY -> string, INT96 -> non-timestamp).
-    # Under a non-default setting, disable the shortcut: every probe
-    # takes the authoritative (still thread-overlapped) Spark path.
-    # nanosAsLong is passed to the arrow probe instead: it decides
-    # whether a top-level INT64 ns column reads as bigint or makes
-    # Spark refuse the file.
-    def _conf(key: str, default: str) -> str:
-        try:
-            return spark.conf.get(key, default)
-        except Exception:
-            return default
-
-    arrow_ok = (
-        _conf("spark.sql.parquet.inferTimestampNTZ.enabled", "true") == "true"
-        and _conf("spark.sql.parquet.binaryAsString", "false") == "false"
-        and _conf("spark.sql.parquet.int96AsTimestamp", "true") == "true"
-    )
-    nanos_as_long = (
-        _conf("spark.sql.legacy.parquet.nanosAsLong", "false").strip().lower()
-        == "true"
-    )
+    arrow_ok, nanos_as_long = _arrow_probe_confs(spark)
 
     def _probe_one(p: str) -> StructType | None:
         if arrow_ok:
@@ -426,8 +462,78 @@ def file_catalog_df(spark: SparkSession, folders: list[str]) -> DataFrame:
     )
 
 
+# Parquet summary files: with mergeSchema off Spark infers from one of
+# these before any data file
+_SUMMARY_PREFIXES = ("_metadata", "_common_metadata")
+
+
+def _spark_lists(name: str) -> bool:
+    """Whether Spark's file listing keeps an entry of this name: it drops
+    ``_``-prefixed names without ``=`` (summary files excepted),
+    ``.``-prefixed names and ``._COPYING_`` files
+    (``HadoopFSUtils.shouldFilterOutPathName``)."""
+    return name.startswith(_SUMMARY_PREFIXES) or not (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _first_data_file(paths: list[str]) -> str | None:
+    """The one footer Spark's schema inference reads with mergeSchema
+    off: the first listed data file in full-path order.  None when the
+    listing is not one this mirror reproduces exactly — a relative,
+    globbed, missing or unlisted path, a non-flat directory (partition
+    columns), a summary file, a streaming sink's log — or when there is
+    no data file at all."""
+    files = []
+    for p in paths:
+        if not os.path.isabs(p) or any(c in p for c in "{}[]*?\\"):
+            return None
+        p = os.path.normpath(p)
+        if os.path.isdir(p):
+            if os.path.exists(os.path.join(p, "_spark_metadata")):
+                return None  # a streaming sink's output: Spark lists its log
+            with os.scandir(p) as it:
+                listed = [(e.path, e.is_file()) for e in it if _spark_lists(e.name)]
+        elif os.path.isfile(p) and _spark_lists(os.path.basename(p)):
+            listed = [(p, True)]
+        else:
+            return None
+        for path, is_file in listed:
+            if not is_file or os.path.basename(path).startswith(_SUMMARY_PREFIXES):
+                return None
+            files.append(path)
+    # Spark sorts Java strings: UTF-16 code-unit order
+    return min(files, key=lambda f: f.encode("utf-16-be"), default=None)
+
+
 def read_parquet_batch(spark: SparkSession, paths: list[str]) -> DataFrame:
     """Vectorized multi-file parquet scan (reference read loop:
     src/main.rs:582-599, one file at a time; Spark reads all files of a
-    batch as one distributed scan with a task per split)."""
+    batch as one distributed scan with a task per split) that starts no
+    schema-inference job.
+
+    With ``spark.sql.parquet.mergeSchema`` off, Spark's inference reads
+    one footer: the first data file in full-path order.  This reader
+    picks the same file, probes it with the arrow footer probe and hands
+    the schema to ``spark.read.schema(...)``, so the schema is the one
+    Spark would infer, with no one-task footer job.  It falls back to
+    plain ``spark.read.parquet(*paths)`` — Spark's own schema or error —
+    when a path is not a local file or flat local directory (partitioned
+    directories, object-store URIs), a summary file or a streaming
+    sink's log is present, there is no data file, the arrow probe raises (an unsafe type, a corrupt
+    footer, or a file Spark refuses such as ns timestamps under default
+    confs), or a reader conf is non-default (the three
+    :func:`probe_schemas` checks, plus mergeSchema).
+    """
+    arrow_ok, nanos_as_long = _arrow_probe_confs(spark)
+    if arrow_ok and _conf(spark, "spark.sql.parquet.mergeSchema", "false") == "false":
+        try:
+            first = _first_data_file(paths)
+            schema = first and _probe_schema_arrow(first, nanos_as_long)
+        except Exception:  # Spark's own inference decides: its schema or error
+            schema = None
+        if schema is not None:
+            return spark.read.schema(schema).parquet(*paths)
     return spark.read.parquet(*paths)

@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from parquet_merger_spark.sources.catalog import read_parquet_batch
+
 
 def _arrow_field_spark_type(path: str, column: str):
     """Spark type of ``column`` probed from one footer (driver-side, cheap)."""
@@ -150,7 +152,7 @@ def skipping_scan(
     stats = parquet_footer_stats(spark, paths, column)
     kept = prune_files(stats, lo, hi)
     if not kept:
-        empty = spark.read.parquet(*paths).filter(F.lit(False))
+        empty = read_parquet_batch(spark, paths).filter(F.lit(False))
         return empty, []
-    df = spark.read.parquet(*kept).filter(F.col(column).between(F.lit(lo), F.lit(hi)))
+    df = read_parquet_batch(spark, kept).filter(F.col(column).between(F.lit(lo), F.lit(hi)))
     return df, kept

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from parquet_merger_spark.barrier import materialize, materialize_lazy
+from parquet_merger_spark.sources.catalog import read_parquet_batch
 
 # STREAM_LATENCY_r09 measured the per-batch addBatch wall of the
 # stream-stream interval join against the number of state partitions:
@@ -123,7 +124,7 @@ def windowed_event_counts_stream(
 
     ``query.processAllAvailable()`` drains the directory synchronously for
     tests."""
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet_batch(spark, [events_dir]).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -191,7 +192,7 @@ def session_window_stream(
     update mode's keyed-row contract can't express
     (STREAMING_OUTPUT_MODE.UNSUPPORTED_OPERATION on 4.1.2); ``complete``
     is the other accepted mode."""
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet_batch(spark, [events_dir]).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -223,7 +224,7 @@ def streaming_distinct_events(
     (event rate x watermark horizon), not the full history.  Exactly the
     operator an ingestion pipeline puts in front of every downstream
     aggregate."""
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet_batch(spark, [events_dir]).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -267,7 +268,7 @@ def enrich_stream(
     This is the enrichment shape every ingestion pipeline needs before
     aggregation (the batch twin :func:`enrich_with_dim_batch` is the
     oracle-checkable contract)."""
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet_batch(spark, [events_dir]).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -336,7 +337,7 @@ def correlate_streams(
     history.  Without the time bound Spark would have to buffer both
     streams forever; this is THE pattern that makes stream-stream joins
     bounded.  Inner join in append mode emits each pair exactly once."""
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet_batch(spark, [events_dir]).schema
 
     def side() -> DataFrame:
         return (
@@ -394,7 +395,7 @@ def stream_to_parquet(
     the sink a real ingestion job runs).  Restarting from the same
     checkpoint never duplicates or drops a batch — Spark's file-sink
     commit log records exactly which files each batch wrote."""
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet_batch(spark, [events_dir]).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -433,7 +434,7 @@ def user_running_totals_stream(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet_batch(spark, [events_dir]).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -513,7 +514,7 @@ def drift_cusum_stream(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet_batch(spark, [events_dir]).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -638,7 +639,7 @@ def stream_upsert_to_table(
     format's MERGE (Delta/Iceberg) so only touched files rewrite;
     the structure of this operator is exactly what that body looks like.
     """
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet_batch(spark, [events_dir]).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -805,7 +806,7 @@ def stream_near_dedup_to_table(
     import json
     import os
 
-    schema = spark.read.parquet(docs_dir).schema
+    schema = read_parquet_batch(spark, [docs_dir]).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1001,7 +1002,7 @@ def cms_freq_stream(
     own DuckDB oracle."""
     from parquet_merger_spark.operators.sketches import cms_probe_entries
 
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet_batch(spark, [events_dir]).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1053,7 +1054,7 @@ def mincount_distinct_stream(
         portable_hash64,
     )
 
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet_batch(spark, [events_dir]).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1109,7 +1110,7 @@ def vq_sketch_stream(
         portable_hash64,
     )
 
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet_batch(spark, [events_dir]).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1152,7 +1153,7 @@ def digit_counts_stream(
     bit-for-bit after any replay and the ``stream_benford_audit`` key
     certifies the derived chi-square table with the batch twin's DuckDB
     oracle."""
-    schema = spark.read.parquet(rows_dir).schema
+    schema = read_parquet_batch(spark, [rows_dir]).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1195,7 +1196,7 @@ def moment_sums_stream(
     key certifies that with the batch twin's oracle.  The fourth member
     of the bounded-state streaming family (counters, registers,
     value-count tables, and now moment vectors)."""
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet_batch(spark, [events_dir]).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1243,7 +1244,7 @@ def constraint_counts_stream(
     per-rule table with the batch twin's oracle
     (``constraint_violations_audit``).  The data-contract gate run
     continuously on the ingest stream."""
-    schema = spark.read.parquet(lineitem_dir).schema
+    schema = read_parquet_batch(spark, [lineitem_dir]).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

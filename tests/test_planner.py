@@ -1,7 +1,10 @@
 """Catalog + planner tests (SURVEY §2.1 S1-S3, §2.5 A2, EP2)."""
 
+import os
+
 import pandas as pd
 import pytest
+from pyspark.sql.types import StructType
 
 from parquet_merger_spark.operators.merge import merged_df
 from parquet_merger_spark.plans.planner import plan_batch, smart_batch
@@ -166,22 +169,21 @@ def test_merged_df_names_first_unreadable_in_path_order(spark, tmp_path):
     assert "b_bad.parquet" in str(exc.value)
 
 
-def test_arrow_fast_probe_parity_type_zoo(spark, tmp_path, jobs_started):
-    """The arrow fast probe must be a byte-identical shortcut: for every
-    type in the zoo — safe-set types mapped directly, unsafe types
-    (unsigned) via the Spark-probe fallback, top-level ns-INT64
-    timestamps answered by the arrow tier itself — probe_schemas ==
-    probe_schema under both nanosAsLong values, including None for files
-    Spark itself refuses (ns-annotated INT64 by default) and for corrupt
-    files."""
+def _write_type_zoo(spark, tmp_path) -> list[str]:
+    """One file per parquet type the arrow probe has to answer: the
+    parity-pinned safe set, unsigned ints and ns timestamps (Spark-probe
+    fallback or Spark refuses the file), a required field, an ns column
+    under a Spark-schema footer, two Spark-written parts (INT96; a stored
+    schema the parquet types cannot express) and a corrupt file.  Paths
+    in write order; every file is named ``<case>.parquet`` except the
+    Spark parts, which sit in directories ``int96`` and ``spark_stored``."""
     import datetime
     import decimal
+    import glob
 
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import types as T
-
-    from parquet_merger_spark.sources.catalog import probe_schemas
 
     cases = {
         "bool": pa.array([True, None], pa.bool_()),
@@ -244,15 +246,37 @@ def test_arrow_fast_probe_parity_type_zoo(spark, tmp_path, jobs_started):
     spark.createDataFrame(
         [(datetime.datetime(2024, 1, 1), "x")], "ts timestamp, s string"
     ).coalesce(1).write.mode("overwrite").parquet(int96_dir)
-    import glob
-
     paths.append(glob.glob(f"{int96_dir}/part-*.parquet")[0])
+    # Spark reads the schema its writer stored: intervals (stored as plain
+    # ints) and a field comment (no parquet form) — Spark-probe fallback
+    stored_dir = str(tmp_path / "spark_stored")
+    spark.sql(
+        "SELECT INTERVAL '1-2' YEAR TO MONTH AS ym,"
+        " INTERVAL '1 2:03:04' DAY TO SECOND AS dt, 1 AS c"
+    ).selectExpr("ym", "dt", "c").withMetadata("c", {"comment": "x"}).coalesce(
+        1
+    ).write.mode("overwrite").parquet(stored_dir)
+    paths.append(glob.glob(f"{stored_dir}/part-*.parquet")[0])
     # corrupt file -> None from both
     bad = str(tmp_path / "corrupt.parquet")
     with open(bad, "wb") as fh:
         fh.write(b"nope")
     paths.append(bad)
 
+    return paths
+
+
+def test_arrow_fast_probe_parity_type_zoo(spark, tmp_path, jobs_started):
+    """The arrow fast probe must be a byte-identical shortcut: for every
+    type in the zoo — safe-set types mapped directly, unsafe types
+    (unsigned) via the Spark-probe fallback, top-level ns-INT64
+    timestamps answered by the arrow tier itself — probe_schemas ==
+    probe_schema under both nanosAsLong values, including None for files
+    Spark itself refuses (ns-annotated INT64 by default) and for corrupt
+    files."""
+    from parquet_merger_spark.sources.catalog import probe_schemas
+
+    paths = _write_type_zoo(spark, tmp_path)
     ns_paths = [str(tmp_path / f"{n}.parquet") for n in ("ts_ns", "ts_ns_tz")]
     key = "spark.sql.legacy.parquet.nanosAsLong"
     saved = spark.conf.get(key, None)
@@ -279,6 +303,182 @@ def test_arrow_fast_probe_parity_type_zoo(spark, tmp_path, jobs_started):
             merged_df(spark, ns_paths)
     finally:
         spark.conf.unset(key) if saved is None else spark.conf.set(key, saved)
+
+
+def _outcome(read):
+    """A read's schema, or the type of the exception it raised."""
+    try:
+        return read().schema
+    except Exception as ex:  # noqa: BLE001 — the type is the outcome
+        return type(ex)
+
+
+def _spark_part(spark, rows, ddl, directory, name):
+    """Write ``rows`` with Spark as one part and move it to ``directory``
+    under ``name``; returns the new path."""
+    import glob
+    import shutil
+
+    tmp = f"{directory}.{name}.w"
+    spark.createDataFrame(rows, ddl).coalesce(1).write.parquet(tmp)
+    dst = os.path.join(directory, name)
+    os.makedirs(directory, exist_ok=True)
+    shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], dst)
+    shutil.rmtree(tmp)
+    return dst
+
+
+def test_read_parquet_batch_schema_parity_no_job(spark, tmp_path, jobs_started):
+    """read_parquet_batch reports exactly Spark's inferred schema and,
+    where the arrow probe answers, starts no Spark job: every zoo file
+    Spark can read, a flat directory whose first part (in path order,
+    not write order) differs from the rest, and a two-path call whose
+    first file in path order is the second argument — under both
+    nanosAsLong values.  Files outside the pinned set take Spark's own
+    inference, one job."""
+    import glob
+
+    from parquet_merger_spark.sources.catalog import read_parquet_batch
+
+    (tmp_path / "zoo").mkdir()
+    zoo = _write_type_zoo(spark, tmp_path / "zoo")
+    fallback = {
+        *(str(tmp_path / "zoo" / f"{n}.parquet") for n in ("u8", "u32", "u64")),
+        str(tmp_path / "zoo" / "ts_ns_spark_schema.parquet"),
+        *glob.glob(str(tmp_path / "zoo" / "spark_stored" / "part-*.parquet")),
+    }
+    parts = str(tmp_path / "parts")
+    for name, rows, ddl in (
+        ("part-00002.parquet", [(1, 2.5)], "a long, c double"),
+        ("part-00001.parquet", [(1, 2.5)], "a long, c double"),
+        ("part-00000.parquet", [(1, "x")], "a long, b string"),
+    ):
+        _spark_part(spark, rows, ddl, parts, name)
+    # listed names Spark drops; both sort before the parts
+    open(os.path.join(parts, "_SUCCESS"), "w").close()
+    open(os.path.join(parts, ".part-00000.parquet.crc"), "w").close()
+    two = [
+        _write(tmp_path / "two" / "z" / "p.parquet", {"z": [1]}).rsplit("/", 1)[0],
+        _write(tmp_path / "two" / "a.parquet", {"a": ["x"]}),
+    ]
+    cases = [[p] for p in zoo] + [[parts], two]
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    saved = spark.conf.get(key, None)
+    try:
+        for nanos_as_long in ("true", "false"):
+            spark.conf.set(key, nanos_as_long)
+            readable = 0
+            for paths in cases:
+                want = _outcome(lambda: spark.read.parquet(*paths))
+                if not isinstance(want, StructType):
+                    continue  # Spark cannot read it: the fallback test's case
+                readable += 1
+                got = []
+                jobs = jobs_started(
+                    lambda: got.append(read_parquet_batch(spark, paths).schema)
+                )
+                assert got == [want], (nanos_as_long, paths)
+                assert jobs == int(paths[0] in fallback), (nanos_as_long, paths)
+            # all but the corrupt file, and the ns files by default
+            assert readable == len(cases) - (1 if nanos_as_long == "true" else 3)
+    finally:
+        spark.conf.unset(key) if saved is None else spark.conf.set(key, saved)
+    assert read_parquet_batch(spark, [parts]).columns == ["a", "b"]
+    assert read_parquet_batch(spark, two).columns == ["a"]
+
+
+def test_read_parquet_batch_fallbacks_match_spark(spark, tmp_path):
+    """Where the first-file rule does not hold, or the arrow probe cannot
+    answer, read_parquet_batch is plain ``spark.read.parquet``: the same
+    schema, or the same exception type — a partitioned directory, a
+    summary file, a streaming sink's log, an ns file under default
+    confs, an empty directory, a corrupt file, mergeSchema on and NTZ
+    inference off."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_merger_spark.sources.catalog import read_parquet_batch
+
+    hive = str(tmp_path / "hive")
+    spark.range(4).selectExpr("id", "id % 2 AS k").write.partitionBy("k").parquet(hive)
+    summary = tmp_path / "summary"  # the data file sorts before the summary
+    _write(summary / "A.parquet", {"x": [1]})
+    pq.write_metadata(
+        pa.schema([("x", pa.int64()), ("y", pa.string())]),
+        str(summary / "_common_metadata"),
+    )
+    merged = tmp_path / "merged"
+    _write(merged / "a.parquet", {"x": [1]})
+    _write(merged / "b.parquet", {"y": ["s"]})
+    naive = str(tmp_path / "naive.parquet")
+    pq.write_table(
+        pa.table({"t": pa.array([datetime.datetime(2024, 1, 1)], pa.timestamp("us"))}),
+        naive,
+    )
+    ns = str(tmp_path / "ts_ns.parquet")
+    pq.write_table(
+        pa.table({"t": pa.array([datetime.datetime(2024, 1, 1)], pa.timestamp("ns"))}),
+        ns,
+    )
+    sink = tmp_path / "sink"  # a streaming sink's output: Spark lists its log
+    _write(sink / "a.parquet", {"x": [1]})
+    (sink / "_spark_metadata").mkdir()
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    corrupt = tmp_path / "corrupt.parquet"
+    corrupt.write_bytes(b"nope")
+
+    def same(paths, kind):
+        want = _outcome(lambda: spark.read.parquet(*paths))
+        assert isinstance(want, kind), (paths, want)
+        assert _outcome(lambda: read_parquet_batch(spark, paths)) == want, paths
+        return want
+
+    assert "k" in same([hive], StructType).fieldNames()
+    assert same([str(summary)], StructType).fieldNames() == ["x", "y"]
+    same([str(sink)], type)  # the log lists no file
+    same([str(empty)], type)
+    same([str(corrupt)], type)
+    # want None: Spark raises (INT64 TIMESTAMP(NANOS) is refused by default)
+    for key, value, paths, want in (
+        ("spark.sql.legacy.parquet.nanosAsLong", "false", [ns], None),
+        ("spark.sql.parquet.mergeSchema", "true", [str(merged)], "struct<x:bigint,y:string>"),
+        ("spark.sql.parquet.inferTimestampNTZ.enabled", "false", [naive], "struct<t:timestamp>"),
+    ):
+        saved = spark.conf.get(key, None)
+        try:
+            spark.conf.set(key, value)
+            if want is None:
+                same(paths, type)
+            else:
+                assert same(paths, StructType).simpleString() == want
+        finally:
+            spark.conf.unset(key) if saved is None else spark.conf.set(key, saved)
+
+
+def test_index_loaders_start_one_job(spark, tmp_path, jobs_started):
+    """load_gram_index and load_pq_index read their index directories
+    with no schema-inference job: the one job each starts is the
+    collect of their one-row metadata table."""
+    from parquet_merger_spark.operators.dedup import load_gram_index, write_gram_index
+    from parquet_merger_spark.operators.simsearch import load_pq_index, write_pq_index
+
+    train = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string",
+    )
+    write_gram_index(train, str(tmp_path / "grams"), shingle_words=3)
+    vecs = spark.createDataFrame(
+        [(i, [float((i * j) % 5) for j in range(8)]) for i in range(16)],
+        "vec_id long, embedding array<float>",
+    )
+    write_pq_index(vecs, str(tmp_path / "pq"), m=4, n_codes=4, iters=1)
+
+    assert jobs_started(lambda: load_gram_index(spark, str(tmp_path / "grams"))) == 1
+    assert jobs_started(lambda: load_pq_index(spark, str(tmp_path / "pq"))) == 1
 
 
 def test_probe_schemas_distributed_tier_parity(spark, tmp_path):
