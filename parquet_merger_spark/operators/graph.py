@@ -57,27 +57,30 @@ def pagerank_int(
     integer percentage so the damping multiply stays exact.  Pass
     ``assume_distinct=True`` when the caller already dedups edges — it
     elides a full shuffle of E.  Pass ``assume_symmetric=True`` when
-    every vertex appears as a src (undirected graphs stored as both
-    directions): the vertex set then falls out of the degree table for
-    free instead of a distinct over 2|E| rows.
+    the edge list holds both directions of every edge (undirected
+    graphs): every vertex is then a dst, so each pass's contribution
+    aggregate already has one row per vertex and the new ranks are a
+    projection of it — no vertex set, no distinct over 2|E| rows and no
+    join back onto the vertices.
 
     ``broadcast_ranks`` (default) ships the O(V) rank/contribution
     frames to every executor each pass, so the cached O(E) side NEVER
     re-shuffles — per iteration: one map-side join over cached E, one
-    contribution aggregate (the only E-volume shuffle), one broadcast
-    join back onto the vertex set.  The degree table is O(V) and rides
-    the same broadcast fast path.  Set it False when V itself is too
-    big to broadcast (billions of vertices at 100 TB): the loop then
-    relies on co-partitioned shuffle joins — pre-bucket E and the rank
-    table on the vertex key so those joins stay exchange-free.
+    contribution aggregate (the only E-volume shuffle) and, on the
+    directed path, one broadcast join back onto the vertex set.  The
+    degree table is O(V) and rides the same broadcast fast path.  Set
+    it False when V itself is too big to broadcast (billions of
+    vertices at 100 TB): the loop then relies on co-partitioned shuffle
+    joins — pre-bucket E and the rank table on the vertex key so those
+    joins stay exchange-free.
 
-    The loop invariants (degree-annotated edges, vertex set) are
-    persisted AND EAGERLY materialized (one count() each) before the
-    loop.  Lazy persists were measured 2x slower end-to-end: the final
-    action's concurrent broadcast stages all see a cold cache and RACE
-    to recompute the degree shuffle over E (9.6s -> 5.3s at sf0.1 from
-    the eager counts alone; the same pathology as dup_clusters' edge
-    checkpoint).
+    The loop invariants (the degree-annotated edges, plus the vertex set
+    on the directed path only) are persisted AND EAGERLY materialized
+    (one count() each) before the loop.  Lazy persists were measured 2x
+    slower end-to-end: the final action's concurrent broadcast stages
+    all see a cold cache and RACE to recompute the degree shuffle over
+    E (9.6s -> 5.3s at sf0.1 from the eager counts alone; the same
+    pathology as dup_clusters' edge checkpoint).
     """
     src, dst = F.col(src_col), F.col(dst_col)
     e = edges.select(src.alias("src"), dst.alias("dst"))
@@ -103,19 +106,23 @@ def pagerank_int(
     # degree join falls back to a co-partitioned shuffle join, keyed on
     # the same vertex key as the loop joins.
     maybe_b = F.broadcast if broadcast_ranks else (lambda df: df)
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).persist()
+    # deg is not persisted: its only consumer, e_deg, is cached and
+    # counted eagerly below
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     e_deg = e.join(maybe_b(deg), "src").persist()
     e_deg.count()
-    if assume_symmetric:
-        vertices = deg.select(F.col("src").alias("vertex")).persist()
-    else:
+    invariants = [e_deg]
+    if not assume_symmetric:
+        # vertices with no in-edge still need the base rank, so the
+        # directed path joins each pass's contributions onto this set
         vertices = (
             e_deg.select(F.col("src").alias("vertex"))
             .union(e_deg.select(F.col("dst").alias("vertex")))
             .distinct()
             .persist()
         )
-    vertices.count()
+        vertices.count()
+        invariants.append(vertices)
     base = (100 - damping_pct) * SCALE // 100
 
     # uniform SCALE init; ranks stays None while the loop can still fold
@@ -141,17 +148,14 @@ def pagerank_int(
                 F.expr("rank_micro div outdeg").alias("c"),
             )
         contrib = scored.groupBy("vertex").agg(F.sum("c").alias("s"))
-        ranks = (
-            vertices.join(maybe_b(contrib), "vertex", "left")
-            .select(
-                "vertex",
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"({damping_pct} * coalesce(s, 0L)) div 100"
-                    )
-                ).cast("long").alias("rank_micro"),
-            )
+        if not assume_symmetric:
+            contrib = vertices.join(maybe_b(contrib), "vertex", "left")
+        ranks = contrib.select(
+            "vertex",
+            (
+                F.lit(base)
+                + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
+            ).cast("long").alias("rank_micro"),
         )
         # Truncate lineage EVERY SECOND pass, never after the last: the
         # r02 final plan unrolled all iterations (43 exchanges of
@@ -169,13 +173,13 @@ def pagerank_int(
         if it % 2 == 1 and it != iterations - 1:
             ranks = ranks.transform(materialize_lazy)
     # Materialize the final O(V) rank frame, then RELEASE the loop
-    # invariants: without this, deg/e_deg/vertices stay pinned in the
+    # invariants: without this, e_deg/vertices stay pinned in the
     # CacheManager across calls (every later plan analysis walks them —
     # the +85% tax documented in SURVEY §9.10), and only a caller-side
     # clearCache() would mitigate it.  The checkpoint makes the returned
     # frame self-contained, so the unpersists cannot force a recompute.
     ranks = ranks.transform(materialize)
-    for inv in (deg, e_deg, vertices):
+    for inv in invariants:
         inv.unpersist()
     return ranks
 

@@ -774,8 +774,8 @@ def q_pagerank(spark, sf_dir):
     )
     # li is distinct and the two directions live in disjoint id ranges,
     # so the exploded pairs are already duplicate-free — skip the
-    # operator's dedup; every vertex appears as a src (symmetric), so
-    # the vertex set falls out of the degree table
+    # operator's dedup; both directions are present (symmetric), so
+    # each pass's contributions already cover every vertex
     return pagerank_int(
         edges, iterations=3, assume_distinct=True, assume_symmetric=True
     )
@@ -12142,8 +12142,9 @@ def q_revenue_pareto_share(spark, sf_dir):
     t = the k-th largest distinct-spend boundary; ties at t are all
     included, so the set is deterministic under any ordering engine).
     All sums exact cents; the share is ONE division.  Scale: one
-    custkey aggregate, a count-table window, and a 1-row fold — no
-    global row sort."""
+    custkey aggregate, then ONE single-partition window pass over the
+    count table (running and whole-table sums share its sort) and a
+    1-row fold — no join, no global row sort."""
     o = _t(spark, sf_dir, "orders").select(
         "o_custkey", F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents")
     )
@@ -12152,26 +12153,25 @@ def q_revenue_pareto_share(spark, sf_dir):
         F.count(F.lit(1)).alias("cnt"), F.sum("spend").alias("rev")
     )
     w = Window.orderBy(F.desc("spend"))
+    whole = Window.partitionBy()
     cum = counts.select(
-        "spend", "cnt", "rev", F.sum("cnt").over(w).alias("cum")
+        "spend",
+        F.sum("cnt").over(w).alias("cum"),
+        F.sum("rev").over(w).alias("cum_rev"),
+        F.sum("cnt").over(whole).alias("n"),
+        F.sum("rev").over(whole).alias("total_rev"),
     )
-    tot = counts.agg(
-        F.sum("cnt").alias("n"), F.sum("rev").alias("total_rev")
+    # spend is unique per count-table row, so the customers with
+    # spend >= t are exactly the running count at t: the top decile's
+    # size and revenue are the running sums on the threshold row
+    top = cum.filter(F.col("cum") * 10 >= F.col("n")).agg(
+        F.max("n").alias("n"),
+        F.max("total_rev").alias("total_rev"),
+        F.max("spend").alias("t"),
+        F.max_by("cum", "spend").alias("n_top"),
+        F.max_by("cum_rev", "spend").alias("top_rev"),
     )
-    cj = cum.crossJoin(F.broadcast(tot))
-    thr = cj.filter(F.col("cum") * 10 >= F.col("n")).agg(
-        F.max("spend").alias("t")
-    )
-    top = (
-        counts.crossJoin(F.broadcast(thr))
-        .filter(F.col("spend") >= F.col("t"))
-        .agg(
-            F.sum("cnt").alias("n_top"),
-            F.sum("rev").alias("top_rev"),
-            F.max("t").alias("t"),
-        )
-    )
-    return top.crossJoin(F.broadcast(tot)).select(
+    return top.select(
         F.col("n").cast("long").alias("n_customers"),
         F.col("n_top").cast("long").alias("n_top_decile"),
         F.col("t").cast("long").alias("threshold_cents"),

@@ -55,6 +55,22 @@ def test_pagerank_dangling_node_keeps_base_rank(spark):
     assert got[9] > 0
 
 
+def test_pagerank_symmetric_path_matches_default(spark):
+    """assume_symmetric=True builds each pass's ranks from the
+    contributions alone (no vertex join): on a both-directions edge list
+    it must equal the simulation and the default path, and leave no
+    cache entry behind."""
+    edges = sorted({e for a, b in EDGES for e in ((a, b), (b, a))})
+    e = spark.createDataFrame(edges, "src long, dst long")
+    spark.catalog.clearCache()  # earlier tests' entries are not this call's
+    sym = pagerank_int(e, 3, assume_distinct=True, assume_symmetric=True)
+    got = {r["vertex"]: r["rank_micro"] for r in sym.collect()}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert got == _simulate(edges, 3)
+    default = {r["vertex"]: r["rank_micro"] for r in pagerank_int(e, 3).collect()}
+    assert got == default
+
+
 # ---------------------------------------------------------------------------
 # triangle_count
 # ---------------------------------------------------------------------------

@@ -8,6 +8,8 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from parquet_merger_spark.operators.dedup import simhash_signatures  # noqa: E402
@@ -361,7 +363,6 @@ _BNLJ_VOUCHED = {
     "benford_digit_audit",
     "seasonality_dow",
     "graph_kcore_portable",
-    "revenue_pareto_share",
     "embedding_norm_audit",
     "segment_priority_association",
     "join_skew_diagnosis",
@@ -633,3 +634,14 @@ def test_final_plan_digest_sees_runtime_adaptive_plan(spark):
     pr = QUERIES["pagerank"](spark, SF_DIR)
     fpr = final_plan_digest(pr)
     assert fpr["cartesian_products"] == 0
+
+
+@pytest.mark.parametrize(
+    "name,max_jobs", [("revenue_pareto_share", 4), ("pagerank", 13)]
+)
+def test_query_job_pins(spark, jobs_started, name, max_jobs):
+    """Job census pins: revenue_pareto_share runs its count table through
+    one window pass (no broadcast cross-joins re-running its shuffle),
+    and symmetric PageRank builds ranks from the contributions alone (no
+    vertex set, no per-pass vertex join)."""
+    assert jobs_started(lambda: QUERIES[name](spark, SF_DIR).collect()) <= max_jobs
