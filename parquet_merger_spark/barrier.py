@@ -36,6 +36,21 @@ round's reference).  Sessions built elsewhere should set the same conf
 — it is a SparkConf (context-creation-time) setting, not a runtime SQL
 conf.  The final returned frame's checkpoint stays alive as long as the
 caller holds the DataFrame, exactly as intended.
+
+SHARED INTERMEDIATES: an operator that feeds one computed table to
+several consumers (the dedup family's signature and shingle tables)
+shares it through :func:`materialize_lazy`, never through a lazy
+``persist``.  A persist leaves a CacheManager entry behind the call,
+and under AQE every scan of the cached relation becomes its own
+``TableCacheQueryStage`` with its own job.  A lazy LOCAL checkpoint is
+computed once: concurrent consumer stages wait on the block lock, then
+read the blocks, and each consumer is a plain ``LogicalRDD`` scan.  A
+lazy RELIABLE checkpoint has no such lock: every consumer that runs
+before the checkpoint is written recomputes the plan, and so does the
+write itself (a pandas UDF behind a 3-consumer plan evaluated 16,000
+rows for its 4,000 lazily, 4,000 eagerly; local[4]).  So with a
+checkpoint dir set, :func:`materialize` checkpoints EAGERLY whatever
+``eager`` says: one job up front, and every consumer reads the files.
 """
 
 from __future__ import annotations
@@ -55,9 +70,10 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
 
     ``eager=False`` defers the materializing job to the first action
     that touches the result (the one-job-per-round pattern in
-    ``dedup_clusters``/``pagerank``)."""
+    ``dedup_clusters``/``pagerank``).  It applies to the local mode only:
+    a reliable checkpoint is always eager (see the module docstring)."""
     if reliable_checkpoints_enabled(df):
-        return df.checkpoint(eager=eager)
+        return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=eager)
 
 

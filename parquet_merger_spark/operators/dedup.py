@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parquet_merger_spark.barrier import materialize, materialize_lazy
-from parquet_merger_spark.partitioning import fan_out
+from parquet_merger_spark.partitioning import fan_out, local_frame
 from parquet_merger_spark.sources.catalog import read_parquet_batch
 
 
@@ -194,7 +194,7 @@ def minhash_signatures(
 
     Downstream Jaccard verification runs on the compact ``sh_hashes``
     long array (exact up to xxhash64 collisions, ~2^-64), which also
-    keeps the persisted working set ~10x smaller than shingle strings.
+    keeps the checkpointed working set ~10x smaller than shingle strings.
     """
     from pyspark.sql.types import ArrayType, LongType
 
@@ -306,7 +306,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     shingle_words: int = 2,
     threshold: float = 0.5,
-    storage_level=None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + LSH banding, Jaccard-verified.
 
@@ -324,16 +323,13 @@ def minhash_lsh_pairs(
     sf0.1 documents table); steeper r at fixed t* cuts candidates, and
     recall above t* stays ~1 (bounded in tests/test_recall.py).
 
-    ``storage_level`` controls how the signature table is persisted
-    across its two consumers (bucket generation + Jaccard verification;
-    default MEMORY_AND_DISK — pass ``StorageLevel.DISK_ONLY`` at cluster
-    scale).  The persisted table lives until the session ends or the
-    caller runs ``spark.catalog.clearCache()`` — in a long-lived
-    service, clear it after materializing the result (same persist
-    hygiene contract as :func:`ngram_jaccard_pairs`).
+    The signature table feeds bucket generation and both sides of the
+    Jaccard verification through one lazy checkpoint
+    (:func:`~parquet_merger_spark.barrier.materialize_lazy`): computed
+    once, no cache entry left behind.  At cluster scale set
+    ``spark.sparkContext.setCheckpointDir`` and the barrier writes it
+    to that reliable store instead.
     """
-    from pyspark import StorageLevel
-
     # ValueError, not assert: stripped under python -O this would silently
     # drop the trailing hashes from the last band (recall loss, no error)
     if num_hashes % bands != 0:
@@ -347,7 +343,7 @@ def minhash_lsh_pairs(
     eligible = df.filter(F.size(tokens_col(text_col)) >= shingle_words)
     sigs = minhash_signatures(
         eligible, id_col, text_col, num_hashes, shingle_words
-    ).persist(storage_level or StorageLevel.MEMORY_AND_DISK)
+    ).transform(materialize_lazy)
 
     buckets = lsh_band_buckets(sigs, id_col, num_hashes, bands)
 
@@ -396,7 +392,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     shingle_words: int = 2,
     threshold: float = 0.5,
-    storage_level: "StorageLevel | None" = None,
     candidate_pairs: DataFrame | None = None,
 ) -> DataFrame:
     """EXACT n-gram Jaccard similarity join with prefix + positional
@@ -432,15 +427,12 @@ def ngram_jaccard_pairs(
     the whole prefix/PPJoin candidate machinery is skipped — cost becomes
     one shingle-set build plus two equi-joins on the candidate ids,
     O(candidates), with the LSH recall bound (>0.99 at J>=0.8 for b=6,
-    r=2) as the only approximation.  ``storage_level``
-    controls how the shingle table is persisted across its four consumers
-    (default MEMORY_AND_DISK; pass ``StorageLevel.DISK_ONLY`` at cluster
-    scale, or checkpoint to a table).  The persisted table lives until the
-    session ends or the caller runs ``spark.catalog.clearCache()`` — in a
-    long-lived service, clear it after materializing the result.
+    r=2) as the only approximation.  The shingle table and the prefix
+    table are each shared by their consumers through one lazy checkpoint
+    (:func:`~parquet_merger_spark.barrier.materialize_lazy`), as in
+    :func:`minhash_lsh_pairs`; set ``spark.sparkContext.setCheckpointDir``
+    at cluster scale.
     """
-    from pyspark import StorageLevel
-
     # The whole pipeline runs on HASHED shingles (xxhash64 longs) built
     # WITHOUT materializing gram strings (:func:`_distinct_shingle_hashes`
     # hashes each token once then hashes the n adjacent token-hashes —
@@ -455,7 +447,7 @@ def ngram_jaccard_pairs(
     # intersections up to xxhash64 collisions (~2^-64).
     #
     # The hashed arrays feed candidate generation AND both sides of the
-    # verification join — persist so the text-parsing pipeline doesn't
+    # verification join — checkpoint so the text-parsing pipeline doesn't
     # re-run 4x.
     # token-count pre-filter, NOT filter(size(...)>0): the latter is
     # predicate-pushed below the gram-build projection and duplicates it
@@ -472,7 +464,7 @@ def ngram_jaccard_pairs(
             "sh_hashes",
             F.size("sh_hashes").alias("n"),
         )
-        .persist(storage_level or StorageLevel.MEMORY_AND_DISK)
+        .transform(materialize_lazy)
     )
 
     if candidate_pairs is not None:
@@ -501,21 +493,19 @@ def ngram_jaccard_pairs(
         prefix_len = (
             F.floor((1.0 - threshold) * F.col("n") + F.lit(1e-9)).cast("int") + 1
         )
-        # persisted + EAGERLY materialized: the candidate join references
-        # prefix from BOTH aliased sides, and differently-aliased
-        # projections defeat ReuseExchange — un-persisted, the whole
-        # inverted-index + document-frequency + rarity-window pipeline
-        # executed twice inside the one candidate job (measured ~1-2.5s
-        # per extra pass at sf0.1).  The prefix table is small by
-        # construction (floor((1-t)*n)+1 grams per doc, ~1/5 of the
-        # inverted index at t=0.8); same persist-hygiene contract as
-        # ``sh`` above (lives until clearCache / session end).
+        # checkpointed: the candidate join references prefix from BOTH
+        # aliased sides, and differently-aliased projections defeat
+        # ReuseExchange — uncut, the whole inverted-index +
+        # document-frequency + rarity-window pipeline executed twice
+        # inside the one candidate job (measured ~1-2.5s per extra pass
+        # at sf0.1).  The prefix table is small by construction
+        # (floor((1-t)*n)+1 grams per doc, ~1/5 of the inverted index at
+        # t=0.8).
         prefix = (
             ranked.filter(F.col("rn") <= prefix_len)
             .select(id_col, "n", "gram", "rn")
-            .persist(storage_level or StorageLevel.MEMORY_AND_DISK)
+            .transform(materialize_lazy)
         )
-        prefix.count()
 
         # Minimum overlap required for jaccard >= t (epsilon guards FP
         # landing infinitesimally ABOVE the exact rational, which would
@@ -732,7 +722,8 @@ def write_gram_index(
     elif max_train_df is None:
         tr = tr.repartition("g")
     tr.write.mode("overwrite").parquet(f"{path}/grams")
-    sess.createDataFrame(
+    local_frame(
+        sess,
         [(shingle_words, max_train_df)],
         "shingle_words int, max_train_df long",
     ).write.mode("overwrite").parquet(f"{path}/meta")
@@ -1180,7 +1171,6 @@ def simhash_near_dup_pairs(
     max_hamming: int = 3,
     bands: int = 4,
     bits: int = 64,
-    storage_level=None,
 ) -> DataFrame:
     """Near-dup pairs with Hamming distance <= max_hamming on ``bits``-bit
     SimHash.
@@ -1195,14 +1185,10 @@ def simhash_near_dup_pairs(
     recall-lossy.  At billions of docs, raise ``bands`` (narrower chunks ->
     more, smaller buckets) rather than accepting huge per-bucket self-joins.
 
-    ``storage_level``: persist level for the signature table (two
-    consumers — chunk explode + verification join; default
-    MEMORY_AND_DISK, ``DISK_ONLY`` for the cluster tier).  Lives until
-    ``spark.catalog.clearCache()`` — same hygiene contract as
-    :func:`ngram_jaccard_pairs`.
+    The signature table is shared by its consumers through one lazy
+    checkpoint, as in :func:`minhash_lsh_pairs`; set
+    ``spark.sparkContext.setCheckpointDir`` at cluster scale.
     """
-    from pyspark import StorageLevel
-
     # ValueError, not assert: these two guard RECALL invariants — stripped
     # under python -O, a violating call would silently miss pairs
     if not max_hamming < bands:
@@ -1216,8 +1202,8 @@ def simhash_near_dup_pairs(
     # row-group corpus otherwise computes every simhash on one task.
     # The fan-out lives here, not in simhash_signatures, so the
     # signature operator itself stays zero-Exchange as plan-pinned.
-    sigs = simhash_signatures(fan_out(df), id_col, text_col, bits=bits).persist(
-        storage_level or StorageLevel.MEMORY_AND_DISK
+    sigs = simhash_signatures(fan_out(df), id_col, text_col, bits=bits).transform(
+        materialize_lazy
     )
     chunk_bits = bits // bands
     mask = (1 << chunk_bits) - 1
@@ -1352,7 +1338,6 @@ def containment_pairs(
     text_col: str = "text",
     shingle_words: int = 3,
     threshold: float = 0.6,
-    storage_level: "StorageLevel | None" = None,
 ) -> DataFrame:
     """DIRECTIONAL containment near-dup pairs: C(A -> B) =
     |grams(A) & grams(B)| / |grams(A)| >= threshold.  Jaccard misses
@@ -1374,12 +1359,10 @@ def containment_pairs(
     TIERING AT SCALE: verification tier, same contract as
     :func:`ngram_jaccard_pairs` — at 100 TB run it on LSH candidates or
     audit samples; the headline candidate generator stays MinHash-LSH.
-    ``storage_level`` controls the persisted shingle table exactly as in
-    that operator (default MEMORY_AND_DISK; DISK_ONLY at cluster scale;
-    lives until the session ends or ``spark.catalog.clearCache()``).
+    The shingle table is shared through one lazy checkpoint exactly as in
+    that operator (set ``spark.sparkContext.setCheckpointDir`` at cluster
+    scale).
     """
-    from pyspark import StorageLevel
-
     sh = (
         _distinct_shingle_hashes(
             df.filter(F.size(tokens_col(text_col)) >= shingle_words),
@@ -1388,7 +1371,7 @@ def containment_pairs(
             shingle_words,
         )
         .select(F.col(id_col), "sh_hashes", F.size("sh_hashes").alias("n"))
-        .persist(storage_level or StorageLevel.MEMORY_AND_DISK)
+        .transform(materialize_lazy)
     )
     inv = sh.select(F.col(id_col), "n", F.explode("sh_hashes").alias("gram"))
 

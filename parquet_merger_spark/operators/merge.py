@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from parquet_merger_spark.functions.naming import sanitize_filename
+from parquet_merger_spark.partitioning import local_frame
 from parquet_merger_spark.plans.planner import MergePlan
 from parquet_merger_spark.plans.schema import (
     NoCommonColumnsError,
@@ -241,8 +242,10 @@ def merged_df(
     seq_of: dict[str, int] = {}
     for i, u in enumerate(uris):
         seq_of.setdefault(u, i)
-    mapping = spark.createDataFrame(
-        list(seq_of.items()), f"{_ORDER_FP_COL} string, {ORDER_FILE_COL} long"
+    mapping = local_frame(
+        spark,
+        list(seq_of.items()),
+        f"{_ORDER_FP_COL} string, {ORDER_FILE_COL} long",
     )
     # LEFT join + an executor-side null trap, not INNER: an inner join
     # would silently DROP any row whose reported file_path has no mapping
@@ -520,12 +523,13 @@ def merge_batches(
     worker threads and must be thread-safe when ``max_concurrency > 1``.
 
     Spark jobs per batch of arrow-probed files, ``single_file=True``:
-    the file-sequence mapping's broadcast, the ``repartition(1)``
-    shuffle map, the sorted Parquet write, and with ``csv`` one CSV
-    write (4 jobs).  The CSV re-reads the merged file with the schema
-    just written, so no footer-inference job runs, and narrows it with
-    ``coalesce(1)``, so no shuffle runs.  Directory mode runs the
-    Parquet write and with ``csv`` the CSV write (2 jobs).
+    the file-sequence mapping's broadcast (1 task: the mapping is built
+    as one partition), the ``repartition(1)`` shuffle map, the sorted
+    Parquet write, and with ``csv`` one CSV write (4 jobs).  The CSV
+    re-reads the merged file with the schema just written, so no
+    footer-inference job runs, and narrows it with ``coalesce(1)``, so
+    no shuffle runs.  Directory mode runs the Parquet write and with
+    ``csv`` the CSV write (2 jobs).
     """
     import threading
     import uuid

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from parquet_merger_spark.partitioning import local_frame
 from parquet_merger_spark.sources.catalog import read_parquet_batch
 
 QUANT_SCALE = 10_000
@@ -1132,8 +1133,8 @@ def _books_df(spark, books: list[list[list[int]]]) -> DataFrame:
             ],
         )
     ]
-    return spark.createDataFrame(
-        rows, T.StructType([T.StructField("__books", _PQ_BOOKS_SCHEMA, False)])
+    return local_frame(
+        spark, rows, T.StructType([T.StructField("__books", _PQ_BOOKS_SCHEMA, False)])
     )
 
 

@@ -88,6 +88,16 @@ def fan_out(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     return df.repartition(target)
 
 
+def local_frame(spark, rows: list, schema) -> DataFrame:
+    """A local Python list as a ONE-partition DataFrame.
+
+    ``spark.createDataFrame(rows, schema)`` parallelizes the list over
+    the session's default parallelism, so a one-row model table or a
+    small lookup mapping is mostly empty slices: a write leaves an empty
+    part file, and a broadcast runs a task, per extra slice."""
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+
+
 def scaled_partitions(
     source: DataFrame,
     bytes_per_partition: int = 4 << 20,

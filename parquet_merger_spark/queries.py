@@ -13265,7 +13265,7 @@ def q_near_dup_threshold_curve(spark, sf_dir):
     # projections defeat ReuseExchange); now the per-doc distinct happens
     # row-locally inside the array (no corpus-wide distinct shuffle),
     # sizes are F.size() lookups instead of a groupBy, the build is
-    # fan_out-parallel, and the persisted table is narrow longs.
+    # fan_out-parallel, and the checkpointed table is narrow longs.
     from parquet_merger_spark.operators.dedup import (
         _distinct_shingle_hashes,
         tokens_col,
@@ -13276,9 +13276,10 @@ def q_near_dup_threshold_curve(spark, sf_dir):
             d.filter(F.size(tokens_col("text")) >= 2), "doc_id", "text", 2
         )
         .select("doc_id", "sh_hashes", F.size("sh_hashes").alias("n"))
-        .persist()
+        # one lazy checkpoint shared by both self-join sides + the size
+        # projections
+        .transform(materialize_lazy)
     )
-    sh_t.count()  # barrier: both self-join sides + the size projections
     inv = sh_t.select("doc_id", F.explode("sh_hashes").alias("gram"))
     a = inv.alias("a")
     b = inv.alias("b")
@@ -14431,8 +14432,9 @@ def q_weighted_median_price(spark, sf_dir):
     integer weights; target rank (W-1) div 2 + 1 on the cumulative
     weight.  Scale: one count-table shuffle, no row sort.
 
-    r11: the count table is PERSISTED so the per-flag total branch reads
-    the cache instead of re-scanning and re-aggregating lineitem — the
+    r11: the count table is CHECKPOINTED (one lazy local checkpoint, no
+    cache entry left behind) so the per-flag total branch reads it
+    instead of re-scanning and re-aggregating lineitem — the
     r10 plan ran 2 scans + 5 aggregates because ReuseExchange missed
     across the window/aggregate branches.  (An unbounded second window
     over the same partitioning was tried first and measured WORSE,
@@ -14444,7 +14446,11 @@ def q_weighted_median_price(spark, sf_dir):
         F.round(F.col("l_extendedprice") * 100, 0).cast("long").alias("cents"),
         F.round(F.col("l_quantity"), 0).cast("long").alias("w"),
     )
-    counts = li.groupBy("l_returnflag", "cents").agg(F.sum("w").alias("cw")).persist()
+    counts = (
+        li.groupBy("l_returnflag", "cents")
+        .agg(F.sum("w").alias("cw"))
+        .transform(materialize_lazy)
+    )
     win = Window.partitionBy("l_returnflag").orderBy("cents")
     cum = counts.select(
         "l_returnflag", "cents", "cw", F.sum("cw").over(win).alias("cum")

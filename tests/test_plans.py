@@ -16,6 +16,7 @@ from parquet_merger_spark.operators.dedup import simhash_signatures  # noqa: E40
 from parquet_merger_spark.queries import QUERIES  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
+SF_SMOKE = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
 
 
 def _explain(df, mode: str = "formatted") -> str:
@@ -637,11 +638,42 @@ def test_final_plan_digest_sees_runtime_adaptive_plan(spark):
 
 
 @pytest.mark.parametrize(
-    "name,max_jobs", [("revenue_pareto_share", 4), ("pagerank", 13)]
+    "name,max_jobs",
+    [
+        ("revenue_pareto_share", 4),
+        ("pagerank", 13),
+        ("dedup_minhash_lsh", 5),
+        ("dedup_ngram_jaccard", 8),
+        ("dedup_simhash", 4),
+        ("dedup_containment", 9),
+    ],
 )
 def test_query_job_pins(spark, jobs_started, name, max_jobs):
     """Job census pins: revenue_pareto_share runs its count table through
     one window pass (no broadcast cross-joins re-running its shuffle),
     and symmetric PageRank builds ranks from the contributions alone (no
-    vertex set, no per-pass vertex join)."""
+    vertex set, no per-pass vertex join).  The dedup keys share their
+    signature/shingle tables through one lazy checkpoint, so each scan of
+    them is a plain RDD scan, not a cached relation that AQE turns into
+    a job of its own per consumer."""
     assert jobs_started(lambda: QUERIES[name](spark, SF_DIR).collect()) <= max_jobs
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_minhash_lsh",
+        "dedup_ngram_jaccard",
+        "dedup_simhash",
+        "dedup_containment",
+        "near_dup_threshold_curve",
+        "weighted_median_price",
+    ],
+)
+def test_shared_intermediates_leave_no_cache_entry(spark, name):
+    """Caller hygiene: a key that reuses an intermediate shares it through
+    a checkpoint barrier, so the call leaves the CacheManager as it found
+    it (a lazy persist stays cached until the session ends)."""
+    spark.catalog.clearCache()  # earlier tests' entries are not this call's
+    QUERIES[name](spark, SF_SMOKE).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
