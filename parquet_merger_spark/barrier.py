@@ -44,13 +44,17 @@ shares it through :func:`materialize_lazy`, never through a lazy
 and under AQE every scan of the cached relation becomes its own
 ``TableCacheQueryStage`` with its own job.  A lazy LOCAL checkpoint is
 computed once: concurrent consumer stages wait on the block lock, then
-read the blocks, and each consumer is a plain ``LogicalRDD`` scan.  A
-lazy RELIABLE checkpoint has no such lock: every consumer that runs
-before the checkpoint is written recomputes the plan, and so does the
-write itself (a pandas UDF behind a 3-consumer plan evaluated 16,000
-rows for its 4,000 lazily, 4,000 eagerly; local[4]).  So with a
-checkpoint dir set, :func:`materialize` checkpoints EAGERLY whatever
-``eager`` says: one job up front, and every consumer reads the files.
+read the blocks, and each consumer is a plain ``LogicalRDD`` scan.
+"Lazy" is partial: building the barrier runs the shuffle and broadcast
+stages below it (AQE executes them to plan the RDD), so a frame that is
+only built, never collected, still starts those jobs; the final stage
+runs with the first action.  A lazy RELIABLE checkpoint has no such
+lock: every consumer that runs before the checkpoint is written
+recomputes the plan, and so does the write itself (a pandas UDF behind
+a 3-consumer plan evaluated 16,000 rows for its 4,000 lazily, 4,000
+eagerly; local[4]).  So with a checkpoint dir set, :func:`materialize`
+checkpoints EAGERLY whatever ``eager`` says: one job up front, and
+every consumer reads the files.
 """
 
 from __future__ import annotations
@@ -68,10 +72,12 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     """Cut ``df``'s lineage: reliable ``checkpoint`` when the session has
     a checkpoint dir (cluster opt-in), ``localCheckpoint`` otherwise.
 
-    ``eager=False`` defers the materializing job to the first action
-    that touches the result (the one-job-per-round pattern in
-    ``dedup_clusters``/``pagerank``).  It applies to the local mode only:
-    a reliable checkpoint is always eager (see the module docstring)."""
+    ``eager=False`` defers only the FINAL stage to the first action that
+    touches the result: under AQE, ``localCheckpoint(eager=False)``
+    builds the frame's RDD from the adaptive plan, which runs its
+    shuffle and broadcast stages there and then.  It applies to the
+    local mode only: a reliable checkpoint is always eager (see the
+    module docstring)."""
     if reliable_checkpoints_enabled(df):
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=eager)

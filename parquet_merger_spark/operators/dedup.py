@@ -743,7 +743,6 @@ def dup_clusters(
     id_b: str = "id_b",
     max_iters: int = 50,
     steps_per_round: int = 2,
-    checks_every: int = 1,
 ) -> DataFrame:
     """Resolve near-duplicate PAIRS into CLUSTERS: connected components by
     iterative min-label propagation.  Returns (doc_id, cluster_id) for
@@ -778,13 +777,9 @@ def dup_clusters(
     before the loop).  Intermediate steps are referenced exactly once by
     their successor, so composing steps no longer re-executes
     intermediates (the old 2^(k-1) caveat is gone).  Convergence is
-    checked on round-GROUP boundaries: ``checks_every`` composes that
-    many full (steps + shortcut) rounds per convergence check (r11 —
-    fewer barriers/collect jobs where the loop is job-count-bound, up
-    to ``checks_every - 1`` wasted composed rounds where E-shuffles
-    dominate; see the loop comment), and ``max_iters`` bounds CHECKS
-    (``max_iters * checks_every * steps_per_round`` propagation steps,
-    each round further accelerated by the shortcut).
+    checked once per round, and ``max_iters`` bounds rounds
+    (``max_iters * steps_per_round`` propagation steps, each round
+    further accelerated by the shortcut).
     Deterministic: pure min over a fixed edge set — any step grouping,
     with or without shortcutting, reaches the same unique fixpoint
     (labels decrease monotonically to the component minimum).
@@ -829,10 +824,9 @@ def dup_clusters(
     # folding (v, v) into the edge set turns the per-step update into a
     # single min-aggregate — min(own, neighbors) needs no left-join-back
     # of the previous labels — and the persisted hash partitioning means
-    # the O(E) side NEVER re-shuffles inside the loop (the pagerank
-    # cached-invariant pattern): each step exchanges only the O(V) label
-    # frame into the join plus the one unavoidable E-volume aggregate
-    # shuffle.  The r09 shape re-shuffled E into the propagation join
+    # the O(E) side NEVER re-shuffles inside the loop: each step
+    # exchanges only the O(V) label frame into the join plus the one
+    # unavoidable E-volume aggregate shuffle.  The r09 shape re-shuffled E into the propagation join
     # EVERY step and paid a third exchange for the label join-back —
     # 3x the per-step exchange count of this form (guide §2.4).
     adj = (
@@ -888,21 +882,9 @@ def dup_clusters(
     converged = False
     for _ in range(max_iters):
         cur = labels
-        # ``checks_every`` > 1 composes that many full (steps + shortcut)
-        # rounds into ONE lazy plan per convergence check (r10 verdict
-        # #5's "propagate k, check every other round" schedule): each
-        # skipped check saves a materialization barrier + a collect job —
-        # the binding cost at small scale where the loop is job-count-
-        # bound — at the risk of up to (checks_every - 1) composed rounds
-        # of wasted E-volume aggregates when convergence lands mid-group
-        # (the binding cost at cluster scale).  Same unique fixpoint
-        # either way (monotone min); ``max_iters`` bounds CHECKS, so the
-        # propagation-step budget is max_iters * checks_every *
-        # steps_per_round.
-        for _g in range(max(1, checks_every)):
-            for _ in range(max(1, steps_per_round)):
-                cur = _step(cur)
-            cur = _shortcut(cur)
+        for _ in range(max(1, steps_per_round)):
+            cur = _step(cur)
+        cur = _shortcut(cur)
         prev = labels.select(
             F.col("node").alias("__pnode"), F.col("label").alias("__plabel")
         )
@@ -1084,17 +1066,7 @@ def semdedup(
     # per barrier cuts rounds 7 -> 4 on the sf0.1 graph (6.1s vs 7.1s
     # wall) and is free since r10's single-reference steps; at worst
     # k-1 steps run past convergence, cheap next to 3 extra barriers.
-    # checks_every stays 1 (r11, MEASURED REJECTION): composing two full
-    # rounds per convergence check halves the barriers/collects (the r10
-    # verdict-#5 schedule), but each round's pointer-jumping shortcut
-    # references its own round's output twice, and that double reference
-    # is only free when it lands on a MATERIALIZED checkpoint — composed
-    # past the barrier it re-executes the inner round's aggregates, and
-    # the deeper AQE plan re-plans every exchange: min-of-5 at sf0.1
-    # went 5.08s -> 8.30s with checks_every=2.  The knob stays available
-    # on dup_clusters for graphs where barrier latency (not E-volume)
-    # dominates — the opposite trade at cluster scale is unproven, so
-    # the default follows the measurement we have.
+    # Rejected: two rounds per convergence check (5.08s -> 8.30s, sf0.1).
     clusters = dup_clusters(
         pairs, max_iters=max_iters, steps_per_round=4
     ).withColumnRenamed("doc_id", "__cid")

@@ -19,13 +19,14 @@ PageRank, whose sum order perturbs last ulps and can never hash-match.
 The div-floor leaks ≤ outdeg micro-units per node per iteration
 (bounded, documented truncation — the price of exactness).
 
-Scale shape per iteration: one shuffle for the contribution aggregate
-(keyed on dst) + one key join against the static degree table (AQE
-broadcasts it when small; co-partitioned otherwise since both sides key
-on the vertex).  State between iterations is one (vertex, rank) frame —
-O(V), never O(E).  For many iterations at 100 TB, checkpoint the rank
-frame every few rounds to truncate the growing lineage (documented;
-3 iterations here keeps plans shallow).
+Scale shape per iteration: the state between passes is the O(V)
+message table ``m(v) = rank(v) div outdeg(v)``, never an O(E) frame.  A
+pass is ONE aggregate: the edges joined against the (broadcast) message
+table on ``src``, grouped on ``dst`` — the only E-volume shuffle.  The
+next message table is O(V) work: a projection of that aggregate on
+symmetric edge lists (a vertex's group size is its out-degree), a join
+against the O(V) degree table otherwise.  For many iterations at 100 TB
+the message table is cut every second pass to keep the lineage shallow.
 """
 
 from __future__ import annotations
@@ -58,37 +59,34 @@ def pagerank_int(
     ``assume_distinct=True`` when the caller already dedups edges — it
     elides a full shuffle of E.  Pass ``assume_symmetric=True`` when
     the edge list holds both directions of every edge (undirected
-    graphs): every vertex is then a dst, so each pass's contribution
-    aggregate already has one row per vertex and the new ranks are a
-    projection of it — no vertex set, no distinct over 2|E| rows and no
-    join back onto the vertices.
+    graphs): every vertex is then a dst, and its group in a pass's
+    aggregate holds one row per out-edge, so the ranks and the next
+    message table are projections of that aggregate — no vertex set, no
+    degree join and no join back onto the vertices.
 
-    ``broadcast_ranks`` (default) ships the O(V) rank/contribution
-    frames to every executor each pass, so the cached O(E) side NEVER
-    re-shuffles — per iteration: one map-side join over cached E, one
-    contribution aggregate (the only E-volume shuffle) and, on the
-    directed path, one broadcast join back onto the vertex set.  The
-    degree table is O(V) and rides the same broadcast fast path.  Set
-    it False when V itself is too big to broadcast (billions of
-    vertices at 100 TB): the loop then relies on co-partitioned shuffle
-    joins — pre-bucket E and the rank table on the vertex key so those
-    joins stay exchange-free.
+    ``broadcast_ranks`` (default) ships the O(V) message table to every
+    executor each pass, so the O(E) edge side never re-shuffles for the
+    join: a pass is one map-side join and one aggregate on ``dst``.  The
+    O(V) joins of the directed path (degree table onto the aggregate,
+    final ranks onto the vertex set) ride the same hint.  Set it False
+    when V itself is too big to broadcast (billions of vertices at
+    100 TB): the hint becomes the identity and the joins are shuffle
+    joins keyed on the vertex — pre-bucket E on ``src`` to keep them
+    exchange-free.
 
-    The loop invariants (the degree-annotated edges, plus the vertex set
-    on the directed path only) are persisted AND EAGERLY materialized
-    (one count() each) before the loop.  Lazy persists were measured 2x
-    slower end-to-end: the final action's concurrent broadcast stages
-    all see a cold cache and RACE to recompute the degree shuffle over
-    E (9.6s -> 5.3s at sf0.1 from the eager counts alone; the same
-    pathology as dup_clusters' edge checkpoint).
+    The loop invariants — the edges, plus the degree table and the
+    vertex set on the directed path — are shared through checkpoint
+    barriers (``barrier.materialize_lazy``), not persisted: each is
+    computed once, every pass scans it as a plain RDD, and the call
+    leaves no CacheManager entry behind.  The returned frame stays lazy.
     """
     src, dst = F.col(src_col), F.col(dst_col)
     e = edges.select(src.alias("src"), dst.alias("dst"))
     if not assume_distinct:
         e = e.distinct()
     if iterations <= 0:
-        # vertex set only — before the degree table and its eager
-        # materialization jobs, which this path never needs
+        # vertex set only — before the barriers, which this path never
+        # needs
         if assume_symmetric:
             verts = e.select(F.col("src").alias("vertex")).distinct()
         else:
@@ -98,90 +96,50 @@ def pagerank_int(
                 .distinct()
             )
         return verts.withColumn("rank_micro", F.lit(SCALE).cast("long"))
-    # Degrees via groupBy + broadcast join back onto E: the groupBy
-    # shuffles E down to O(V) partials map-side, and the join is
-    # map-side against the broadcast degree table — cheaper than the
-    # earlier count-window (hash shuffle + SORT of all of E by src;
-    # measured 5.3s -> 4.0s at sf0.1).  With broadcast_ranks=False the
-    # degree join falls back to a co-partitioned shuffle join, keyed on
-    # the same vertex key as the loop joins.
     maybe_b = F.broadcast if broadcast_ranks else (lambda df: df)
-    # deg is not persisted: its only consumer, e_deg, is cached and
-    # counted eagerly below
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    e_deg = e.join(maybe_b(deg), "src").persist()
-    e_deg.count()
-    invariants = [e_deg]
-    if not assume_symmetric:
-        # vertices with no in-edge still need the base rank, so the
-        # directed path joins each pass's contributions onto this set
-        vertices = (
-            e_deg.select(F.col("src").alias("vertex"))
-            .union(e_deg.select(F.col("dst").alias("vertex")))
-            .distinct()
-            .persist()
-        )
-        vertices.count()
-        invariants.append(vertices)
     base = (100 - damping_pct) * SCALE // 100
-
-    # uniform SCALE init; ranks stays None while the loop can still fold
-    # the constant into a projection (first pass)
-    ranks = None
-    for it in range(iterations):
-        # one E-volume shuffle per iteration (the contribution aggregate
-        # on dst); the rank sides are O(V) and broadcast by default (see
-        # docstring), so cached E stays put
-        if ranks is None:
-            # first pass: every rank is the constant SCALE, so the rank
-            # join folds to a projection over cached E — one broadcast
-            # and one join fewer
-            scored = e_deg.select(
-                F.col("dst").alias("vertex"),
-                F.expr(f"{SCALE}L div outdeg").alias("c"),
-            )
-        else:
-            scored = e_deg.join(
-                maybe_b(ranks), e_deg.src == ranks.vertex
-            ).select(
-                F.col("dst").alias("vertex"),
-                F.expr("rank_micro div outdeg").alias("c"),
-            )
-        contrib = scored.groupBy("vertex").agg(F.sum("c").alias("s"))
-        if not assume_symmetric:
-            contrib = vertices.join(maybe_b(contrib), "vertex", "left")
-        ranks = contrib.select(
-            "vertex",
-            (
-                F.lit(base)
-                + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
-            ).cast("long").alias("rank_micro"),
+    # r'(v) from the pass aggregate's sum s (null: no in-edge)
+    rank = f"{base}L + ({damping_pct} * coalesce(s, 0L)) div 100"
+    e = e.transform(materialize_lazy)
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+    if not assume_symmetric:
+        # read by every pass's message table: shared, not recomputed
+        deg = deg.transform(materialize_lazy)
+        # vertices with no in-edge still need the base rank
+        vertices = (
+            e.select(F.col("src").alias("vertex"))
+            .union(e.select(F.col("dst").alias("vertex")))
+            .distinct()
+            .transform(materialize_lazy)
         )
-        # Truncate lineage EVERY SECOND pass, never after the last: the
-        # r02 final plan unrolled all iterations (43 exchanges of
-        # repeated setup — executed jobs reused the cache, but the plan
-        # text defeated audits and re-optimized a tree that grows with
-        # the iteration count).  Per-pass truncation over-corrected: each
-        # checkpoint is a materialization barrier (a job), and a 2-pass
-        # lineage is still a shallow, auditable plan — so the cadence
-        # halves the barrier count, and the final pass returns without
-        # one (its depth is at most 2 passes).  Checkpointing the O(V)
-        # rank frame is cheap (~21k rows at sf0.1); under AQE the lazy
-        # checkpoint materializes when the loop builds the next pass,
-        # pulling the persisted invariants into cache on the first
-        # iteration.
-        if it % 2 == 1 and it != iterations - 1:
-            ranks = ranks.transform(materialize_lazy)
-    # Materialize the final O(V) rank frame, then RELEASE the loop
-    # invariants: without this, e_deg/vertices stay pinned in the
-    # CacheManager across calls (every later plan analysis walks them —
-    # the +85% tax documented in SURVEY §9.10), and only a caller-side
-    # clearCache() would mitigate it.  The checkpoint makes the returned
-    # frame self-contained, so the unpersists cannot force a recompute.
-    ranks = ranks.transform(materialize)
-    for inv in invariants:
-        inv.unpersist()
-    return ranks
+    # message tables are keyed on "src"; every rank starts at SCALE
+    msg = deg.select("src", F.expr(f"{SCALE}L div outdeg").alias("m"))
+    aggs = [F.sum("m").alias("s")]
+    if assume_symmetric:
+        aggs.append(F.count(F.lit(1)).alias("outdeg"))
+    for it in range(iterations):
+        if it:
+            if assume_symmetric:
+                msg = agg.select(F.col("vertex").alias("src"), "outdeg", "s")
+            else:
+                msg = deg.join(
+                    maybe_b(agg.select(F.col("vertex").alias("src"), "s")),
+                    "src",
+                    "left",
+                )
+            msg = msg.select("src", F.expr(f"({rank}) div outdeg").alias("m"))
+            # cut the lineage every second pass, or the plan unrolls
+            # every pass before it
+            if it % 2 == 0:
+                msg = msg.transform(materialize_lazy)
+        agg = (
+            e.join(maybe_b(msg), "src")
+            .groupBy(F.col("dst").alias("vertex"))
+            .agg(*aggs)
+        )
+    if not assume_symmetric:
+        agg = vertices.join(maybe_b(agg), "vertex", "left")
+    return agg.select("vertex", F.expr(rank).alias("rank_micro"))
 
 
 def triangle_count(
@@ -291,7 +249,7 @@ def _triangle_count_body(
     # broadcasts and the n_vertices count) would otherwise each rerun
     # the 2|E| explode+groupBy — differently-aliased projections defeat
     # ReuseExchange, and concurrent broadcast builds race a cold cache
-    # (the pagerank_int / dup_clusters pathology)
+    # (the dup_clusters pathology)
     deg = (
         _shard(
             e.select(
@@ -410,7 +368,6 @@ def _triangle_count_body(
     )
     # 1-row census: materialize it, then release EVERY persisted
     # intermediate so nothing pins block-manager memory across calls
-    # (same rationale as pagerank_int's exit path)
     result = result.transform(materialize)
     for cached in (deg, out_nbrs, e, oriented):
         cached.unpersist()

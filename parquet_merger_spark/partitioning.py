@@ -29,8 +29,9 @@ from pyspark.sql import DataFrame
 # explicitly partitioned) upstream: the single-file SCAN pathology
 # fan_out exists to fix cannot survive them, and adding a round-robin
 # Exchange on top of an already-exchanged frame is a full re-shuffle at
-# scale.  Checked textually against the ANALYZED plan (word-bounded so
-# column names can at worst false-positive into a harmless no-op).
+# scale.  Matched against the NODE NAMES of the analyzed plan (so
+# "Repartition" also blocks RepartitionByExpression), never against its
+# text, where a column named ``SortKey`` would read as a sort.
 _FAN_OUT_BLOCKERS = (
     "Join",
     "Aggregate",
@@ -77,8 +78,8 @@ def fan_out(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
         return df
     target = min_parallelism or df.sparkSession.sparkContext.defaultParallelism
     try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-        if any(b in plan for b in _FAN_OUT_BLOCKERS):
+        names = _node_names(df._jdf.queryExecution().analyzed())
+        if any(b in name for name in names for b in _FAN_OUT_BLOCKERS):
             return df
         n_files = len(df.inputFiles())
     except Exception:
@@ -86,6 +87,18 @@ def fan_out(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     if n_files == 0 or n_files >= target:
         return df
     return df.repartition(target)
+
+
+def _node_names(plan) -> list[str]:
+    """The ``nodeName`` of every node in a JVM plan tree (one py4j call
+    per node and per child list; subquery expressions are not walked)."""
+    names, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return names
 
 
 def local_frame(spark, rows: list, schema) -> DataFrame:

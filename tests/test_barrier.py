@@ -52,6 +52,20 @@ def test_lazy_local_barrier_runs_kernel_once(spark):
     assert rows_evaluated(spark) == ROWS
 
 
+def test_lazy_barrier_runs_shuffle_stages_at_build(spark, jobs_started):
+    """A lazy local barrier defers only its final stage: building it runs
+    the shuffle below it.  Build plus the first action still start no
+    more jobs than that action over the same frame without the barrier."""
+    from pyspark.sql import functions as F
+
+    def frame():
+        return spark.range(0, 1000, 1, 4).groupBy((F.col("id") % 7).alias("k")).count()
+
+    assert jobs_started(lambda: frame().transform(materialize_lazy)) >= 1
+    plain = jobs_started(lambda: frame().collect())
+    assert jobs_started(lambda: frame().transform(materialize_lazy).collect()) <= plain
+
+
 def test_reliable_barrier_runs_kernel_once():
     """Reliable mode: with a checkpoint dir set the barrier checkpoints
     eagerly.  A lazy reliable checkpoint would evaluate the kernel once

@@ -5,6 +5,8 @@ determinism contract must hold under repartitioning.
 
 from __future__ import annotations
 
+import pytest
+
 from parquet_merger_spark.operators.graph import SCALE, pagerank_int
 
 
@@ -69,6 +71,42 @@ def test_pagerank_symmetric_path_matches_default(spark):
     assert got == _simulate(edges, 3)
     default = {r["vertex"]: r["rank_micro"] for r in pagerank_int(e, 3).collect()}
     assert got == default
+
+
+# a dangling sink (5: no out-edge) and a source (6: no in-edge, so its
+# rank is the base and its messages come from the degree table alone)
+DIRECTED = EDGES + [(2, 5), (6, 1)]
+SYMMETRIC = sorted({e for a, b in EDGES for e in ((a, b), (b, a))})
+
+
+@pytest.mark.parametrize("broadcast_ranks", [True, False])
+@pytest.mark.parametrize("symmetric", [False, True], ids=["directed", "symmetric"])
+@pytest.mark.parametrize("iterations", [0, 1, 2, 3, 5])
+def test_pagerank_paths_match_simulation(spark, iterations, symmetric, broadcast_ranks):
+    """Every pass count on both paths, with and without the broadcast
+    hint, equals the simulation and leaves no cache entry behind (the
+    loop shares its invariants through checkpoints, not persists)."""
+    edges = SYMMETRIC if symmetric else DIRECTED
+    e = spark.createDataFrame(edges, "src long, dst long")
+    spark.catalog.clearCache()  # earlier tests' entries are not this call's
+    ranks = pagerank_int(
+        e,
+        iterations,
+        assume_distinct=True,
+        assume_symmetric=symmetric,
+        broadcast_ranks=broadcast_ranks,
+    )
+    got = {r["vertex"]: r["rank_micro"] for r in ranks.collect()}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert got == _simulate(edges, iterations)
+
+
+def test_pagerank_directed_job_pin(spark, jobs_started):
+    """Job census pin for the directed path: the edges, degree table and
+    vertex set are each computed once behind a checkpoint, and a pass is
+    one aggregate over the edges joined with the message table."""
+    e = spark.createDataFrame(EDGES, "src long, dst long")
+    assert jobs_started(lambda: pagerank_int(e, 3).collect()) <= 13
 
 
 # ---------------------------------------------------------------------------

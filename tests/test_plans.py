@@ -641,7 +641,7 @@ def test_final_plan_digest_sees_runtime_adaptive_plan(spark):
     "name,max_jobs",
     [
         ("revenue_pareto_share", 4),
-        ("pagerank", 13),
+        ("pagerank", 9),
         ("dedup_minhash_lsh", 5),
         ("dedup_ngram_jaccard", 8),
         ("dedup_simhash", 4),
@@ -651,11 +651,12 @@ def test_final_plan_digest_sees_runtime_adaptive_plan(spark):
 def test_query_job_pins(spark, jobs_started, name, max_jobs):
     """Job census pins: revenue_pareto_share runs its count table through
     one window pass (no broadcast cross-joins re-running its shuffle),
-    and symmetric PageRank builds ranks from the contributions alone (no
-    vertex set, no per-pass vertex join).  The dedup keys share their
-    signature/shingle tables through one lazy checkpoint, so each scan of
-    them is a plain RDD scan, not a cached relation that AQE turns into
-    a job of its own per consumer."""
+    and symmetric PageRank makes one aggregate per pass over the edges
+    joined with an O(V) message table, whose next table is a projection
+    of that aggregate (no degree join, no vertex set, no persist).  The
+    dedup keys share their signature/shingle tables through one lazy
+    checkpoint, so each scan of them is a plain RDD scan, not a cached
+    relation that AQE turns into a job of its own per consumer."""
     assert jobs_started(lambda: QUERIES[name](spark, SF_DIR).collect()) <= max_jobs
 
 
