@@ -149,46 +149,55 @@ def vq_merge(sketch: DataFrame, to_group_cols: list[str]) -> DataFrame:
     return sketch.groupBy(*to_group_cols, "v").agg(F.sum("cnt").alias("cnt"))
 
 
+def lower_rank(num: int, den: int) -> str:
+    """The lower-quantile rank ``(n - 1) * num div den + 1`` of the
+    fraction ``num/den`` as an integer SQL expression over the group
+    total ``n`` — a :func:`vq_quantiles` rank (exact integers, no float
+    probabilities, so every engine selects the same rank)."""
+    if den <= 0:
+        raise ValueError(f"quantile fraction needs den > 0; got {num}/{den}")
+    return f"((n - 1) * {num}) div {den} + 1"
+
+
 def vq_quantiles(
     sketch: DataFrame,
     group_cols: list[str],
-    qs: list[tuple[str, int, int]],
+    qs: list[tuple[str, str]],
 ) -> DataFrame:
-    """(group_cols..., q_label, n, v): lower order statistics of the
-    sketched sample.  For each quantile ``(label, num, den)`` the target
-    rank is ``(n - 1) * num div den + 1`` (exact integers — no float
-    probabilities, so every engine selects the same rank) and the
-    emitted ``v`` is the unique sketch value whose cumulative count
-    interval covers it.  The per-group cumulative window runs over the
-    COUNT TABLE (distinct sampled values), never rows — the
-    length_trim_corpus idiom, no single-task data sort at any grain."""
-    if not qs or any(den <= 0 for _, _, den in qs):
-        raise ValueError(
-            f"qs must be a non-empty list of (label, num, den>0); got {qs!r}"
-        )
+    """(group_cols..., n, <label>...): exact rank selection over a
+    value-count table — one row per group, one column per quantile.
+
+    ``sketch`` is a ``(group_cols..., v, cnt)`` count table (a
+    :func:`vq_sketch`, an exact value count, or any table whose ``cnt``
+    is a non-negative integer weight; rows of equal ``v`` in a group
+    count together); ``n`` is the group's total count.
+    Each ``(label, rank)`` in ``qs`` names an integer SQL expression over
+    ``n`` — :func:`lower_rank` for the ``(n-1)*num div den + 1`` rule, or
+    any other rank such as ``(n * 95 + 99) div 100`` (= ceil(0.95 n)) —
+    and ``<label>`` is the first ``v`` whose cumulative count reaches
+    it: the value whose cumulative interval covers the rank.
+
+    One cumulative window over the count table joined to its broadcast
+    per-group totals (one row per group), then one aggregate picks every
+    label.  The window runs over the COUNT TABLE (distinct values), never
+    rows; with ``group_cols=[]`` it runs in one partition over that
+    table, the 1-row total is cross-joined, and an empty table gives one
+    all-null row."""
+    if not qs:
+        raise ValueError(f"qs must be a non-empty list of (label, rank); got {qs!r}")
     w = Window.partitionBy(*group_cols).orderBy("v").rowsBetween(
         Window.unboundedPreceding, 0
     )
     cum = sketch.withColumn("cum", F.sum("cnt").over(w))
-    totals = sketch.groupBy(*group_cols).agg(F.sum("cnt").alias("n"))
-    cum = cum.join(totals, group_cols)
-    frames = []
-    for label, num, den in qs:
-        rank = F.expr(f"((n - 1) * {num}) div {den} + 1")
-        frames.append(
-            cum.filter(
-                (F.col("cum") - F.col("cnt") < rank) & (rank <= F.col("cum"))
-            ).select(
-                *group_cols,
-                F.lit(label).alias("q_label"),
-                F.col("n").cast("long").alias("n"),
-                "v",
-            )
-        )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    totals = F.broadcast(sketch.groupBy(*group_cols).agg(F.sum("cnt").alias("n")))
+    cum = cum.join(totals, group_cols) if group_cols else cum.crossJoin(totals)
+    return cum.groupBy(*group_cols).agg(
+        F.max("n").alias("n"),
+        *[
+            F.min(F.when(F.col("cum") >= F.expr(rank), F.col("v"))).alias(label)
+            for label, rank in qs
+        ],
+    )
 
 
 def cms_probe_entries(

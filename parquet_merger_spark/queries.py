@@ -41,6 +41,7 @@ from parquet_merger_spark.operators.sampling import (
 )
 from parquet_merger_spark.operators.merge import merge_dataframes, merged_df
 from parquet_merger_spark.operators.ranking import assign_row_ids
+from parquet_merger_spark.operators.sketches import lower_rank, vq_merge, vq_quantiles
 from parquet_merger_spark.operators.multimodal import (
     attach_binary_payload,
     extract_payload_meta,
@@ -8663,30 +8664,34 @@ def q_quantile_sketch_rollup(spark, sf_dir):
     sort at any grain.  At 100 TB the exact tier is what you drop; the
     sketch tier answers percentile dashboards at any rollup grain from
     a few thousand (value, cnt) pairs per partition."""
-    from parquet_merger_spark.operators.sketches import (
-        vq_merge,
-        vq_quantiles,
-        vq_sketch,
-    )
+    from parquet_merger_spark.operators.sketches import vq_sketch
 
-    qs = [("p50", 1, 2), ("p95", 19, 20)]
     e = _events(spark, sf_dir).select(
         F.col("event_type").alias("scope"), "event_id", "value"
     )
     sk = vq_sketch(e, ["scope"], "value", "event_id", rate_den=8)
-    sk_all = vq_merge(sk.withColumn("scope", F.lit("__all__")), ["scope"])
-    est = vq_quantiles(sk.unionByName(sk_all), ["scope"], qs)
+    return _vq_rollup(sk, e)
+
+
+def _vq_rollup(sk, scoped):
+    """(scope, q_label, n_sample, v_est, v_exact): p50/p95 of a
+    ``(scope, v, cnt)`` sketch and of the ungated ``(scope, value)`` rows
+    it samples, each with an ``__all__`` row merged from the scopes."""
+    qs = [("p50", lower_rank(1, 2)), ("p95", lower_rank(19, 20))]
+
+    def quantiles(counts):
+        counts_all = vq_merge(counts.withColumn("scope", F.lit("__all__")), ["scope"])
+        return vq_quantiles(counts.unionByName(counts_all), ["scope"], qs).select(
+            "scope", "n", F.expr("stack(2, 'p50', p50, 'p95', p95) AS (q_label, v)")
+        )
 
     full = (
-        e.filter(F.col("value").isNotNull())
+        scoped.filter(F.col("value").isNotNull())
         .groupBy("scope", F.col("value").alias("v"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    full_all = vq_merge(full.withColumn("scope", F.lit("__all__")), ["scope"])
-    exact = vq_quantiles(full.unionByName(full_all), ["scope"], qs).select(
-        "scope", "q_label", F.col("v").alias("v_exact")
-    )
-    return est.join(exact, ["scope", "q_label"]).select(
+    exact = quantiles(full).select("scope", "q_label", F.col("v").alias("v_exact"))
+    return quantiles(sk).join(exact, ["scope", "q_label"]).select(
         "scope",
         "q_label",
         F.col("n").alias("n_sample"),
@@ -11648,11 +11653,10 @@ def q_winsorized_mean_by_nation(spark, sf_dir):
     """Per-nation winsorized mean order price (clamp to [p05, p95], then
     average) — the robust revenue statistic that survives fat-tail
     outliers.  Percentiles are EXACT rank selections over the
-    per-nation value-count table (rank k = ceil(q*n) via integer
-    arithmetic, value = first cents whose cumulative count reaches k) —
-    the same no-single-task-sort design as percentile_bands_per_type:
-    the window runs over (nation, distinct-cents) count rows, never
-    raw orders.  The clamped mean folds exact cents; one final
+    per-nation value-count table (:func:`vq_quantiles`; rank k = ceil(q*n)
+    via integer arithmetic, value = first cents whose cumulative count
+    reaches k): the window runs over (nation, distinct-cents) count rows,
+    never raw orders.  The clamped mean folds exact cents; one final
     division.  Scale: one orders->customer join (nation broadcast),
     one count-table shuffle."""
     o = _t(spark, sf_dir, "orders").select(
@@ -11664,17 +11668,11 @@ def q_winsorized_mean_by_nation(spark, sf_dir):
         F.broadcast(n), c.c_nationkey == n.n_nationkey
     )
     counts = j.groupBy("n_name", "cents").agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.partitionBy("n_name").orderBy("cents")
-    cum = counts.select(
-        "n_name", "cents", "cnt", F.sum("cnt").over(w).alias("cum")
-    )
-    tot = counts.groupBy("n_name").agg(F.sum("cnt").alias("nn"))
-    cj = cum.join(F.broadcast(tot), "n_name")
-    p = cj.groupBy("n_name").agg(
-        F.min(F.when(F.col("cum") * 100 >= F.lit(5) * F.col("nn"), F.col("cents"))).alias("p05"),
-        F.min(F.when(F.col("cum") * 100 >= F.lit(95) * F.col("nn"), F.col("cents"))).alias("p95"),
-        F.max("nn").alias("nn"),
-    )
+    p = vq_quantiles(
+        counts.withColumnRenamed("cents", "v"),
+        ["n_name"],
+        [("p05", "(n * 5 + 99) div 100"), ("p95", "(n * 95 + 99) div 100")],
+    ).withColumnRenamed("n", "nn")
     clamped = counts.join(F.broadcast(p), "n_name").select(
         "n_name",
         "nn",
@@ -11847,7 +11845,6 @@ def q_stream_quantile_rollup(spark, sf_dir):
     import shutil
     import uuid
 
-    from parquet_merger_spark.operators.sketches import vq_merge, vq_quantiles
     from parquet_merger_spark.streaming.events import vq_sketch_stream
 
     base = _scratch_dir(spark, "stream_quantile_rollup")
@@ -11868,29 +11865,7 @@ def q_stream_quantile_rollup(spark, sf_dir):
     # a few hundred rows by construction
     sk = spark.table(name).transform(materialize)
 
-    qs = [("p50", 1, 2), ("p95", 19, 20)]
-    sk_all = vq_merge(sk.withColumn("scope", F.lit("__all__")), ["scope"])
-    est = vq_quantiles(sk.unionByName(sk_all), ["scope"], qs)
-
-    scoped = _events(spark, sf_dir).select(
-        F.col("event_type").alias("scope"), "value"
-    )
-    full = (
-        scoped.filter(F.col("value").isNotNull())
-        .groupBy("scope", F.col("value").alias("v"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    full_all = vq_merge(full.withColumn("scope", F.lit("__all__")), ["scope"])
-    exact = vq_quantiles(full.unionByName(full_all), ["scope"], qs).select(
-        "scope", "q_label", F.col("v").alias("v_exact")
-    )
-    return est.join(exact, ["scope", "q_label"]).select(
-        "scope",
-        "q_label",
-        F.col("n").alias("n_sample"),
-        F.col("v").alias("v_est"),
-        "v_exact",
-    )
+    return _vq_rollup(sk, e.withColumnRenamed("event_type", "scope"))
 
 
 ORACLE_SQL["stream_quantile_rollup"] = ORACLE_SQL["quantile_sketch_rollup"]
@@ -12342,8 +12317,8 @@ def q_boxplot_by_segment(spark, sf_dir):
     """Per-market-segment boxplot as data: five-number summary (min, q1,
     median, q3, max) of order totals plus Tukey-fence outlier counts —
     the distribution dashboard artifact.  Quantiles are EXACT rank
-    selections over the per-segment value COUNT TABLE (rank =
-    (n-1)*num div den + 1; the percentile_bands idiom — no per-group
+    selections over the per-segment value COUNT TABLE
+    (:func:`vq_quantiles`, rank = (n-1)*num div den + 1 — no per-group
     row sort at any scale), and the 1.5*IQR fences are evaluated in
     DOUBLED integer cents (2c < 5*q1 - 3*q3) so outlier membership
     never touches a double.  Scale: one orders->customer broadcast-dim
@@ -12357,34 +12332,19 @@ def q_boxplot_by_segment(spark, sf_dir):
         F.col("c_mktsegment").alias("segment"), "cents"
     )
     counts = j.groupBy("segment", "cents").agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.partitionBy("segment").orderBy("cents")
-    cum = counts.select(
-        "segment", "cents", "cnt", F.sum("cnt").over(w).alias("cum")
+    span = counts.groupBy("segment").agg(
+        F.min("cents").alias("v_min"), F.max("cents").alias("v_max")
     )
-    tot = counts.groupBy("segment").agg(
-        F.sum("cnt").alias("n"),
-        F.min("cents").alias("v_min"),
-        F.max("cents").alias("v_max"),
+    quartiles = vq_quantiles(
+        counts.withColumnRenamed("cents", "v"),
+        ["segment"],
+        [
+            ("q1", lower_rank(1, 4)),
+            ("median", lower_rank(1, 2)),
+            ("q3", lower_rank(3, 4)),
+        ],
     )
-    cj = cum.join(F.broadcast(tot), "segment")
-
-    def pick(num, den, name):
-        rank = (F.col("n") - 1) * num - ((F.col("n") - 1) * num) % den
-        rank = rank / den + 1  # exact: (n-1)*num div den + 1
-        return (
-            cj.filter(
-                (F.col("cum") - F.col("cnt") < rank) & (rank <= F.col("cum"))
-            )
-            .groupBy("segment")
-            .agg(F.min("cents").alias(name))
-        )
-
-    q1, med, q3 = pick(1, 4, "q1"), pick(1, 2, "median"), pick(3, 4, "q3")
-    fences = (
-        tot.join(F.broadcast(q1), "segment")
-        .join(F.broadcast(med), "segment")
-        .join(F.broadcast(q3), "segment")
-    )
+    fences = span.join(F.broadcast(quartiles), "segment")
     out = (
         counts.join(F.broadcast(fences.select("segment", "q1", "q3")), "segment")
         .groupBy("segment")
@@ -13387,9 +13347,9 @@ QUERIES["class_balance_weights"] = q_class_balance_weights
 def q_time_to_first_purchase(spark, sf_dir):
     """Conversion-lag summary: per user, seconds from first event to
     first purchase; reduced to conversion rate, median and p90 lag via
-    EXACT rank selection over the lag count table (no row sort), plus
-    the unconverted population — the activation-funnel headline
-    numbers.  All time arithmetic integer epoch seconds; rate is ONE
+    EXACT rank selection over the lag count table (:func:`vq_quantiles`,
+    no row sort), plus the unconverted population — the activation-funnel
+    headline numbers.  All time arithmetic integer epoch seconds; rate is ONE
     division.  Scale: one user aggregate, one count-table window."""
     e = _events(spark, sf_dir).select(
         "user_id",
@@ -13405,28 +13365,20 @@ def q_time_to_first_purchase(spark, sf_dir):
     lags = per.select((F.col("tp") - F.col("t0")).alias("lag"))
     counts = (
         lags.filter(F.col("lag").isNotNull())
-        .groupBy("lag")
+        .groupBy(F.col("lag").alias("v"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    w = Window.orderBy("lag")
-    cum = counts.select("lag", "cnt", F.sum("cnt").over(w).alias("cum"))
-    tot = counts.agg(F.sum("cnt").alias("nc"))
-    cj = cum.crossJoin(F.broadcast(tot))
-    med = cj.filter(
-        (F.col("cum") - F.col("cnt") < F.expr("(nc - 1) div 2 + 1"))
-        & (F.expr("(nc - 1) div 2 + 1") <= F.col("cum"))
-    ).agg(F.min("lag").alias("median_lag_s"))
-    p90 = cj.filter(
-        (F.col("cum") - F.col("cnt") < F.expr("((nc - 1) * 9) div 10 + 1"))
-        & (F.expr("((nc - 1) * 9) div 10 + 1") <= F.col("cum"))
-    ).agg(F.min("lag").alias("p90_lag_s"))
+    lag_q = vq_quantiles(
+        counts,
+        [],
+        [("median_lag_s", lower_rank(1, 2)), ("p90_lag_s", lower_rank(9, 10))],
+    )
     users = per.agg(
         F.count(F.lit(1)).alias("n_users"),
         F.sum(F.when(F.col("tp").isNotNull(), 1).otherwise(0)).alias("n_converted"),
     )
     return (
-        users.crossJoin(F.broadcast(med))
-        .crossJoin(F.broadcast(p90))
+        users.crossJoin(F.broadcast(lag_q))
         .select(
             F.col("n_users").cast("long").alias("n_users"),
             F.col("n_converted").cast("long").alias("n_converted"),
@@ -13727,9 +13679,9 @@ QUERIES["open_order_backlog"] = q_open_order_backlog
 def q_supplier_lead_time(spark, sf_dir):
     """Per-supplier fulfilment lead time (order date -> line ship date,
     integer days): count, mean (one division) and EXACT median via the
-    per-supplier count-table rank selection — the SLA scorecard.
-    Sampled to 1-in-5 suppliers for the contract row; the operator is
-    full-corpus.  Scale: one orderkey join, one (supplier, lag) count
+    per-supplier count-table rank selection (:func:`vq_quantiles`) — the
+    SLA scorecard.  Sampled to 1-in-5 suppliers for the contract row; the
+    operator is full-corpus.  Scale: one orderkey join, one (supplier, lag) count
     shuffle, count-table windows."""
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_orderdate").cast("timestamp").cast("long").alias("oe")
@@ -13743,22 +13695,17 @@ def q_supplier_lead_time(spark, sf_dir):
         "l_suppkey",
         ((F.col("se") - F.col("oe")) / 86400).cast("long").alias("lag_days"),
     )
-    counts = j.groupBy("l_suppkey", "lag_days").agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.partitionBy("l_suppkey").orderBy("lag_days")
-    cum = counts.select(
-        "l_suppkey", "lag_days", "cnt", F.sum("cnt").over(w).alias("cum")
+    counts = j.groupBy("l_suppkey", F.col("lag_days").alias("v")).agg(
+        F.count(F.lit(1)).alias("cnt")
     )
     tot = counts.groupBy("l_suppkey").agg(
-        F.sum("cnt").alias("n"),
-        F.sum(F.col("lag_days") * F.col("cnt")).alias("s"),
+        F.sum(F.col("v") * F.col("cnt")).alias("s")
     )
-    cj = cum.join(F.broadcast(tot), "l_suppkey")
-    med = cj.filter(
-        (F.col("cum") - F.col("cnt") < F.expr("(n - 1) div 2 + 1"))
-        & (F.expr("(n - 1) div 2 + 1") <= F.col("cum"))
-    ).groupBy("l_suppkey").agg(F.min("lag_days").alias("median_lag_days"))
+    med = vq_quantiles(
+        counts, ["l_suppkey"], [("median_lag_days", lower_rank(1, 2))]
+    )
     return (
-        tot.join(F.broadcast(med), "l_suppkey")
+        med.join(F.broadcast(tot), "l_suppkey")
         .select(
             F.col("l_suppkey").alias("suppkey"),
             F.col("n").cast("long").alias("n_lines"),
@@ -13816,8 +13763,8 @@ def q_rfm_segments(spark, sf_dir):
     boundaries (band = 1 + (v > b1) + (v > b2), ties deterministic),
     and the 27-cell segment census reports customers and revenue —
     the classic growth segmentation, exact end to end.  Scale: one
-    custkey aggregate, three model-sized boundary selections (each a
-    count-table window), one census aggregate."""
+    custkey aggregate, three model-sized boundary selections (each one
+    :func:`vq_quantiles` count-table window), one census aggregate."""
     o = _t(spark, sf_dir, "orders").select(
         "o_custkey",
         F.col("o_orderdate").cast("timestamp").cast("long").alias("oe"),
@@ -13832,37 +13779,17 @@ def q_rfm_segments(spark, sf_dir):
             F.count(F.lit(1)).alias("f"),
             F.sum("cents").alias("m"),
         )
-        # the RFM table feeds SEVEN subtrees (six boundary selections +
-        # the banding pass) — checkpoint once or the customer aggregate
-        # recomputes per consumer (plan-digested at 26 exchanges)
+        # the RFM table feeds SEVEN subtrees (each column's count table
+        # is read by its window and by its totals, plus the banding pass)
+        # — checkpoint once or the customer aggregate recomputes per
+        # consumer (plan-digested at 26 exchanges)
         .transform(materialize)
     )
 
     def tercile_bounds(col):
-        counts = per.groupBy(col).agg(F.count(F.lit(1)).alias("cnt"))
-        w = Window.orderBy(col)
-        cum = counts.select(
-            F.col(col).alias("v"), "cnt", F.sum("cnt").over(w).alias("cum")
-        )
-        tot = counts.agg(F.sum("cnt").alias("n"))
-        cj = cum.crossJoin(F.broadcast(tot))
-        r1 = F.expr("(n - 1) div 3 + 1")
-        r2 = F.expr("((n - 1) * 2) div 3 + 1")
-        # both boundaries in ONE count-table pass
-        return cj.agg(
-            F.min(
-                F.when(
-                    (F.col("cum") - F.col("cnt") < r1) & (r1 <= F.col("cum")),
-                    F.col("v"),
-                )
-            ).alias(f"{col}_b1"),
-            F.min(
-                F.when(
-                    (F.col("cum") - F.col("cnt") < r2) & (r2 <= F.col("cum")),
-                    F.col("v"),
-                )
-            ).alias(f"{col}_b2"),
-        )
+        counts = per.groupBy(F.col(col).alias("v")).agg(F.count(F.lit(1)).alias("cnt"))
+        qs = [(f"{col}_b1", lower_rank(1, 3)), (f"{col}_b2", lower_rank(2, 3))]
+        return vq_quantiles(counts, [], qs).drop("n")
 
     bounds = (
         tercile_bounds("r").crossJoin(tercile_bounds("f")).crossJoin(tercile_bounds("m"))
@@ -14428,9 +14355,9 @@ def q_weighted_median_price(spark, sf_dir):
     """Quantity-weighted median of lineitem price per return flag — the
     order statistic where each row counts its weight (the
     volume-weighted sibling of the plain median): EXACT rank selection
-    over the (flag, price) count table with counts replaced by exact
-    integer weights; target rank (W-1) div 2 + 1 on the cumulative
-    weight.  Scale: one count-table shuffle, no row sort.
+    (:func:`vq_quantiles`) over the (flag, price) count table with counts
+    replaced by exact integer weights; target rank (W-1) div 2 + 1 on the
+    cumulative weight.  Scale: one count-table shuffle, no row sort.
 
     r11: the count table is CHECKPOINTED (one lazy local checkpoint, no
     cache entry left behind) so the per-flag total branch reads it
@@ -14447,23 +14374,16 @@ def q_weighted_median_price(spark, sf_dir):
         F.round(F.col("l_quantity"), 0).cast("long").alias("w"),
     )
     counts = (
-        li.groupBy("l_returnflag", "cents")
-        .agg(F.sum("w").alias("cw"))
+        li.groupBy("l_returnflag", F.col("cents").alias("v"))
+        .agg(F.sum("w").alias("cnt"))
         .transform(materialize_lazy)
     )
-    win = Window.partitionBy("l_returnflag").orderBy("cents")
-    cum = counts.select(
-        "l_returnflag", "cents", "cw", F.sum("cw").over(win).alias("cum")
-    )
-    tot = counts.groupBy("l_returnflag").agg(F.sum("cw").alias("tw"))
-    cj = cum.join(F.broadcast(tot), "l_returnflag")
-    rank = F.expr("(tw - 1) div 2 + 1")
     return (
-        cj.filter((F.col("cum") - F.col("cw") < rank) & (rank <= F.col("cum")))
-        .groupBy("l_returnflag")
-        .agg(
-            F.max("tw").cast("long").alias("total_weight"),
-            F.min("cents").cast("long").alias("weighted_median_cents"),
+        vq_quantiles(
+            counts, ["l_returnflag"], [("weighted_median_cents", lower_rank(1, 2))]
+        )
+        .select(
+            "l_returnflag", F.col("n").alias("total_weight"), "weighted_median_cents"
         )
         .orderBy("l_returnflag")
     )

@@ -286,13 +286,13 @@ def test_scd2_empty_tracked_cols_is_key_presence_history(spark):
 def test_vq_quantiles_rejects_empty_or_degenerate_qs(spark):
     import pytest
 
-    from parquet_merger_spark.operators.sketches import vq_quantiles
+    from parquet_merger_spark.operators.sketches import lower_rank, vq_quantiles
 
     sk = spark.createDataFrame([("x", 1, 2)], "scope string, v long, cnt long")
     with pytest.raises(ValueError):
         vq_quantiles(sk, ["scope"], [])
     with pytest.raises(ValueError):
-        vq_quantiles(sk, ["scope"], [("p50", 1, 0)])
+        vq_quantiles(sk, ["scope"], [("p50", lower_rank(1, 0))])
 
 
 # --- operators/ review wave 3 (profile/multimodal/bucketing/chunking/

@@ -120,14 +120,17 @@ def test_vq_quantiles_rank_error_bounded(events_typed):
     """The sampled p50's TRUE percentile rank must sit within 0.10 of
     0.50 (sample ~n/8, binomial rank error ~1/(2*sqrt(n/8)) << 0.10),
     and the exact tier must return the true lower median exactly."""
-    from parquet_merger_spark.operators.sketches import vq_quantiles, vq_sketch
+    from parquet_merger_spark.operators.sketches import (
+        lower_rank,
+        vq_quantiles,
+        vq_sketch,
+    )
 
     all_rows = events_typed.withColumn("scope", F.lit("all"))
     sk = vq_sketch(all_rows, ["scope"], "value", "event_id")
-    est = {
-        r.q_label: r.v
-        for r in vq_quantiles(sk, ["scope"], [("p50", 1, 2), ("p95", 19, 20)]).collect()
-    }
+    (est,) = vq_quantiles(
+        sk, ["scope"], [("p50", lower_rank(1, 2)), ("p95", lower_rank(19, 20))]
+    ).collect()
     values = sorted(r.value for r in events_typed.select("value").collect())
     import bisect
 
@@ -138,14 +141,18 @@ def test_vq_quantiles_rank_error_bounded(events_typed):
     full = all_rows.groupBy("scope", F.col("value").alias("v")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    exact_p50 = vq_quantiles(full, ["scope"], [("p50", 1, 2)]).collect()[0].v
-    assert exact_p50 == values[(len(values) - 1) // 2]
+    (exact,) = vq_quantiles(full, ["scope"], [("p50", lower_rank(1, 2))]).collect()
+    assert exact.p50 == values[(len(values) - 1) // 2]
 
 
 def test_vq_deterministic_under_repartition(events_typed):
-    from parquet_merger_spark.operators.sketches import vq_quantiles, vq_sketch
+    from parquet_merger_spark.operators.sketches import (
+        lower_rank,
+        vq_quantiles,
+        vq_sketch,
+    )
 
-    qs = [("p50", 1, 2), ("p95", 19, 20)]
+    qs = [("p50", lower_rank(1, 2)), ("p95", lower_rank(19, 20))]
     a = {
         tuple(r)
         for r in vq_quantiles(
@@ -162,7 +169,64 @@ def test_vq_deterministic_under_repartition(events_typed):
             ["scope"], qs,
         ).collect()
     }
-    assert a == b and len(a) == 10
+    assert a == b and len(a) == 5
+
+
+def test_vq_quantiles_matches_sorted_reference(spark):
+    """Grouped, global and empty-global selections equal a pure-Python
+    reference: expand each group's (v, cnt) rows into its sorted
+    multiset and index it at the rank.  The table has groups of
+    different n, a repeated value within a group, weights > 1, a
+    zero-weight row and a single-row group; ranks follow both rules in
+    use (``lower_rank`` and ceil(q*n)) plus the end ranks 1 and n."""
+    from parquet_merger_spark.operators.sketches import lower_rank, vq_quantiles
+
+    rows = [
+        ("a", 10, 1), ("a", 20, 3), ("a", 20, 1), ("a", 30, 0),
+        ("a", 40, 2), ("a", 50, 1),
+        ("b", 5, 2), ("b", 20, 4), ("b", 60, 1),
+        ("c", 7, 3),
+    ]
+    qs = [
+        ("q1", lower_rank(1, 4)),
+        ("p50", lower_rank(1, 2)),
+        ("p90", lower_rank(9, 10)),
+        ("p95c", "(n * 95 + 99) div 100"),
+        ("lo", "1"),
+        ("hi", "n"),
+    ]
+    rank_of = {
+        "q1": lambda n: (n - 1) * 1 // 4 + 1,
+        "p50": lambda n: (n - 1) * 1 // 2 + 1,
+        "p90": lambda n: (n - 1) * 9 // 10 + 1,
+        "p95c": lambda n: (n * 95 + 99) // 100,
+        "lo": lambda n: 1,
+        "hi": lambda n: n,
+    }
+
+    def reference(members):
+        values = sorted(v for v, cnt in members for _ in range(cnt))
+        n = len(values)
+        return (n, *(values[rank_of[label](n) - 1] for label, _ in qs))
+
+    t = spark.createDataFrame(rows, "g string, v long, cnt long")
+    glob = t.drop("g")
+    got = (
+        vq_quantiles(t, ["g"], qs)
+        .unionByName(vq_quantiles(glob, [], qs).withColumn("g", F.lit("*")))
+        .unionByName(
+            vq_quantiles(glob.filter(F.lit(False)), [], qs).withColumn("g", F.lit("empty"))
+        )
+        .collect()
+    )
+    labels = ["n"] + [label for label, _ in qs]
+    got = {r.g: tuple(r[c] for c in labels) for r in got}
+    want = {
+        g: reference([(v, c) for gg, v, c in rows if gg == g]) for g in "abc"
+    }
+    want["*"] = reference([(v, c) for _, v, c in rows])
+    want["empty"] = (None,) * len(labels)
+    assert got == want
 
 
 @pytest.fixture(scope="module")
