@@ -771,10 +771,9 @@ def dup_clusters(
     O(diameter / steps_per_round) to O(log diameter): measured at sf0.1
     on the semdedup graph (diameter 17): 9 rounds (r09 shape) -> 4
     rounds.  Per-step cost also fell (r10): self-loops are folded into
-    the persisted adjacency, so each step is ONE min-aggregate —
-    min(own, neighbors) in the same shuffle — with no label join-back,
-    and the E-volume side never re-shuffles (hash-partitioned once,
-    before the loop).  Intermediate steps are referenced exactly once by
+    the adjacency, so each step is ONE min-aggregate — min(own,
+    neighbors) in the same shuffle — with no label join-back.
+    Intermediate steps are referenced exactly once by
     their successor, so composing steps no longer re-executes
     intermediates (the old 2^(k-1) caveat is gone).  Convergence is
     checked once per round, and ``max_iters`` bounds rounds
@@ -789,8 +788,12 @@ def dup_clusters(
     expensive, un-persisted) upstream pair plan once per branch:
     measured 29.5s -> 10.0s on the un-persisted exact-Jaccard pair plan
     at sf0.1.  The pair plan is materialized exactly once (the edge
-    persist), referenced by the self-loop-folded adjacency build, and
-    released as soon as the adjacency cache is up.
+    barrier), and the self-loop-folded adjacency build reads that
+    barrier, never the pair plan.  Both tables are shared through
+    :func:`materialize_lazy`, not a persist: the call leaves no
+    CacheManager entry behind, and every loop scan of the adjacency is a
+    plain RDD scan, where AQE turned each scan of a cached relation into
+    a job of its own.
     """
     edges = (
         pairs.select(
@@ -807,43 +810,24 @@ def dup_clusters(
         )
         .select("e.src", "e.dst")
         .distinct()
-        # EAGERLY MATERIALIZED on purpose: adj below references this
-        # subtree THREE times (both union branches + the node set); a
-        # lazy cache would re-run the upstream (potentially expensive,
-        # un-persisted) pair plan once per branch (measured ~24s vs ~7s
-        # on the exact-Jaccard pair plan at sf0.1).  persist (not
-        # localCheckpoint) so the O(E) blocks are RELEASED at exit —
-        # checkpoint blocks wait on the async ContextCleaner and
-        # measurably poisoned later same-session queries at sf1 (see
-        # triangle_count)
-        .persist()
+        # a barrier on purpose: adj below references this subtree THREE
+        # times (both union branches + the node set); without one, each
+        # branch would re-run the upstream (potentially expensive,
+        # un-persisted) pair plan (measured ~24s vs ~7s on the
+        # exact-Jaccard pair plan at sf0.1)
+        .transform(materialize_lazy)
     )
-    edges.count()
     nodes = edges.select(F.col("src").alias("node")).distinct()
-    # adjacency WITH SELF-LOOPS, hash-partitioned on the probe key ONCE:
-    # folding (v, v) into the edge set turns the per-step update into a
-    # single min-aggregate — min(own, neighbors) needs no left-join-back
-    # of the previous labels — and the persisted hash partitioning means
-    # the O(E) side NEVER re-shuffles inside the loop: each step
-    # exchanges only the O(V) label frame into the join plus the one
-    # unavoidable E-volume aggregate shuffle.  The r09 shape re-shuffled E into the propagation join
-    # EVERY step and paid a third exchange for the label join-back —
-    # 3x the per-step exchange count of this form (guide §2.4).
-    adj = (
-        edges.unionAll(
-            nodes.select(
-                F.col("node").alias("src"), F.col("node").alias("dst")
-            )
-        )
-        .repartition(F.col("src"))
-        .persist()
-    )
-    adj.count()
-    # adj is materialized; the loop never touches the pair plan again
-    edges.unpersist()
-    # initial labels from the CACHED adjacency (self-loops guarantee
-    # every node appears as src), so label init costs a cache scan with
-    # no extra exchange (hash(src) already satisfies the distinct)
+    # adjacency WITH SELF-LOOPS: folding (v, v) into the edge set turns
+    # the per-step update into a single min-aggregate — min(own,
+    # neighbors) needs no left-join-back of the previous labels.  No
+    # hash partitioning on src up front: under AQE a checkpoint reports
+    # unknown output partitioning, so the loop's joins could not use it.
+    adj = edges.unionAll(
+        nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
+    ).transform(materialize_lazy)
+    # initial labels from the adjacency barrier (self-loops guarantee
+    # every node appears as src)
     labels = (
         adj.select(F.col("src").alias("node"))
         .distinct()
@@ -851,11 +835,8 @@ def dup_clusters(
     )
 
     def _step(lab: DataFrame) -> DataFrame:
-        # one E-volume shuffle (the aggregate).  Join strategy stays
-        # AQE's choice: small label frames ride a runtime broadcast
-        # (zero exchange against cached adj); at scale the co-partitioned
-        # shuffle join exchanges only the O(V) label side — the cached
-        # hash(src) partitioning means adj itself never re-shuffles.
+        # join strategy stays AQE's choice: small label frames ride a
+        # runtime broadcast; at scale it is a shuffle join.
         return (
             adj.join(lab, adj.src == lab.node)
             .groupBy("dst")
@@ -905,7 +886,6 @@ def dup_clusters(
             converged = True
             break
     if not converged:
-        adj.unpersist()
         # Returning silently would split one true component into several
         # "clusters" — and the survivor pass downstream would then keep
         # multiple copies of the same duplicate.  Fail loudly instead.
@@ -914,10 +894,6 @@ def dup_clusters(
             "rounds (component diameter exceeds the iteration budget); "
             "raise max_iters"
         )
-    # the final labels checkpoint is already materialized (the last
-    # convergence aggregate ran it), so the result no longer needs the
-    # adjacency cache — release the O(E) blocks now
-    adj.unpersist()
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )

@@ -11,40 +11,23 @@ text-source twin of :func:`operators.profile.quarantine`.
 Spark detail: a query that touches ONLY the corrupt-record column of a
 json/csv source is disallowed (the parser would have nothing to parse),
 and filtering on it from the live scan can re-parse per consumer — so
-both outputs here are derived from one cached parse (document: at real
-scale, write the parsed frame out once and split from that, same shape).
+both outputs here are derived from one checkpointed parse (document: at
+real scale, write the parsed frame out once and split from that, same
+shape).  The checkpoint scan is a ``LogicalRDD``, not a file scan, so the
+rule does not apply to it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from parquet_merger_spark.barrier import materialize_lazy
+
 _CORRUPT = "_corrupt_record"
-
-# every robust read caches one parsed parent (both outputs derive from
-# it); the readers return only the children, so the parents are tracked
-# here and released by release_ingest_caches() — otherwise a pipeline
-# quarantining many shards pins one stale InMemoryRelation per call for
-# the session lifetime, evicting useful blocks
-_CACHED_PARENTS: list[DataFrame] = []
-
-
-def release_ingest_caches() -> int:
-    """Unpersist every parsed frame cached by the robust readers; returns
-    how many were released.  Call after materializing both outputs of a
-    read (the split is correct either way — this only frees storage)."""
-    n = len(_CACHED_PARENTS)
-    while _CACHED_PARENTS:
-        try:
-            _CACHED_PARENTS.pop().unpersist(blocking=False)
-        except Exception:
-            pass  # session already stopped: nothing to free
-    return n
 
 
 def _split_corrupt(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
-    parsed = parsed.cache()
-    _CACHED_PARENTS.append(parsed)
+    parsed = parsed.transform(materialize_lazy)
     valid = parsed.filter(parsed[_CORRUPT].isNull()).drop(_CORRUPT)
     bad = parsed.filter(parsed[_CORRUPT].isNotNull()).select(
         parsed[_CORRUPT].alias("raw_record")

@@ -136,13 +136,14 @@ print("CLUSTER-PIN-OK")
 def test_reliable_checkpoint_recovers_from_executor_kill():
     """r10 (verdict #1): the PAYOFF of reliable checkpoints, exercised.
     On a 2-executor local-cluster with a checkpoint dir set, SIGKILL one
-    executor JVM mid-iteration (after >=2 reliable checkpoints exist) in
-    the middle of dup_clusters on a 30-node chain (~15 min-label rounds,
-    each round a lineage cut) — the job must COMPLETE with the exact
-    component labeling.  Without the checkpoint dir the same kill is
-    fatal (localCheckpoint blocks die with their executor — the control
-    arm lives in tools/fault_recovery.py's artifact, not here, to keep
-    suite wall bounded).  Sizing note: a 2g driver OOM'd PLANNING ~30
+    executor JVM mid-iteration (after >=4 reliable checkpoints exist: the
+    edge and adjacency barriers, round 1's labels and round 2's, whose
+    write is under way) in the middle of dup_clusters on a 30-node chain
+    (5 min-label rounds, each round a lineage cut) — the job must
+    COMPLETE with the exact component labeling.  Without the checkpoint
+    dir the same kill is fatal (localCheckpoint blocks die with their
+    executor — the control arm lives in tools/fault_recovery.py's
+    artifact, not here, to keep suite wall bounded).  Sizing note: a 2g driver OOM'd PLANNING ~30
     reliable-checkpoint rounds post-kill (heap, not disk) — 4g is the
     floor for this shape; production drivers are bigger."""
     code = f"""
@@ -176,7 +177,7 @@ app_id = spark.sparkContext.applicationId
 killed = dict()
 def watcher():
     while True:
-        if len(glob.glob(os.path.join(ckpt, "*", "rdd-*"))) >= 2:
+        if len(glob.glob(os.path.join(ckpt, "*", "rdd-*"))) >= 4:
             pids = _executor_pids(app_id)
             if pids:
                 eid, pid = sorted(pids.items())[-1]

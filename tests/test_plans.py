@@ -646,6 +646,8 @@ _JOB_PINS = [
     ("dedup_containment", 9),
     ("boxplot_by_segment", 15),
     ("time_to_first_purchase", 9),
+    ("dedup_clusters", 31),
+    ("semdedup", 35),
 ]
 
 
@@ -663,8 +665,11 @@ def test_query_job_pins(spark, jobs_started, name, max_jobs):
     relation that AQE turns into a job of its own per consumer.
     boxplot_by_segment and time_to_first_purchase pick all their
     quantiles in one ``vq_quantiles`` aggregate, not one filtered
-    count-table pass and one join per quantile.  The ids name the key
-    only, so lowering a pin keeps the test's name."""
+    count-table pass and one join per quantile.  dedup_clusters and
+    semdedup share the connected-components loop's edge and adjacency
+    tables through checkpoints, so no propagation step scans a cached
+    relation.  The ids name the key only, so lowering a pin keeps the
+    test's name."""
     assert jobs_started(lambda: QUERIES[name](spark, SF_DIR).collect()) <= max_jobs
 
 
@@ -677,12 +682,16 @@ def test_query_job_pins(spark, jobs_started, name, max_jobs):
         "dedup_containment",
         "near_dup_threshold_curve",
         "weighted_median_price",
+        "ingest_quarantine",
+        "dedup_clusters",
     ],
 )
 def test_shared_intermediates_leave_no_cache_entry(spark, name):
     """Caller hygiene: a key that reuses an intermediate shares it through
     a checkpoint barrier, so the call leaves the CacheManager as it found
-    it (a lazy persist stays cached until the session ends)."""
+    it (a lazy persist stays cached until the session ends).  Covers the
+    robust-ingest split and the connected-components loop's edge and
+    adjacency tables too."""
     spark.catalog.clearCache()  # earlier tests' entries are not this call's
     QUERIES[name](spark, SF_SMOKE).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -24,7 +24,10 @@ float rendering — structural nondeterminism fails, benign FP reorder
 noise at digit 15 does not).  Output: ``DETERMINISM_r{N}.json`` with
 one row per key; exit 1 on any mismatch.
 
-Run from the repo root:  python tools/determinism_sweep.py
+Run from the repo root:  python tools/determinism_sweep.py [key ...]
+Naming keys runs only those (triage): their rows merge into the round's
+existing ``DETERMINISM_r{N}.json``; with no such file the run only
+prints, so a subset never stands in for the full sweep.
 """
 
 from __future__ import annotations
@@ -96,16 +99,21 @@ def main() -> None:
 
     n = next_round(ROOT)
     path = os.path.join(ROOT, f"DETERMINISM_r{n:02d}.json")
-    if only and os.path.exists(path):  # triage mode: merge into the artifact
-        with open(path) as fh:
-            merged = json.load(fh)
-        merged.update(out)
-        out = merged
-    from artifact import write_artifact
+    if only and not os.path.exists(path):
+        # triage mode with no full sweep to merge into: a subset written
+        # under the full-sweep name would pass for one, so only print
+        path = "(key subset, not written)"
+    else:
+        if only:  # triage mode: merge into the artifact
+            with open(path) as fh:
+                merged = json.load(fh)
+            merged.update(out)
+            out = merged
+        from artifact import write_artifact
 
-    moved = write_artifact(path, out, indent=1)
-    if moved:
-        print(f"# previous artifact preserved at {moved}")
+        moved = write_artifact(path, out, indent=1)
+        if moved:
+            print(f"# previous artifact preserved at {moved}")
     n_ok = sum(1 for r in out.values() if r["match"])
     print(f"\n{path}: {n_ok} deterministic, {len(out) - n_ok} flagged")
     if n_mismatch:
