@@ -28,8 +28,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parquet_merger_spark.barrier import materialize, materialize_lazy
-from parquet_merger_spark.partitioning import fan_out, local_frame
+from parquet_merger_spark.partitioning import fan_out
 from parquet_merger_spark.sources.catalog import read_parquet_batch
+from parquet_merger_spark.sources.jsonfile import delete_json, read_json, write_json
 
 
 def tokens_col(text: Column | str, sep: str = " ") -> Column:
@@ -695,9 +696,16 @@ def write_gram_index(
     num_partitions: int | None = None,
 ) -> None:
     """Persist the decontamination train-gram inverted index: df-capped
-    ``(g, train_id)`` rows at ``<path>/grams``, build parameters at
-    ``<path>/meta``.  Build once over the train corpus, probe many — the
-    gram build + df-cap aggregation is the expensive part of
+    ``(g, train_id)`` rows at ``<path>/grams``, then the build parameters
+    (``shingle_words``, ``max_train_df``) as the JSON document
+    ``<path>/meta.json``, written on the driver with no Spark job.
+    ``meta.json`` is written last and a stale one is deleted before
+    ``grams/`` is rewritten, so its presence means the index is complete.
+    Indexes written in the older layout (a ``meta/`` Parquet table) have
+    no ``meta.json`` and must be rebuilt.
+
+    Build once over the train corpus, probe many — the gram build +
+    df-cap aggregation is the expensive part of
     :func:`ngram_contamination`, and rebuilding it per probe is both slow
     and high-variance (observed 1.7s<->8.2s at sf0.1).
 
@@ -706,6 +714,8 @@ def write_gram_index(
     ``num_partitions`` proportional to corpus size (or bucket the table)
     so a probe shuffles only the tiny eval side."""
     sess = train.sparkSession
+    meta = f"{path}/meta.json"
+    delete_json(sess, meta)
     tr = _distinct_shingle_hashes(train, id_col, text_col, shingle_words).select(
         F.col(id_col).alias("train_id"),
         F.explode_outer("sh_hashes").alias("g"),
@@ -722,18 +732,17 @@ def write_gram_index(
     elif max_train_df is None:
         tr = tr.repartition("g")
     tr.write.mode("overwrite").parquet(f"{path}/grams")
-    local_frame(
-        sess,
-        [(shingle_words, max_train_df)],
-        "shingle_words int, max_train_df long",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    write_json(sess, meta, {"shingle_words": shingle_words, "max_train_df": max_train_df})
 
 
 def load_gram_index(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
     """(grams, shingle_words) from :func:`write_gram_index` output —
     ``grams`` ready for :func:`contamination_probe`, ``shingle_words``
-    so the probe tokenizes identically to the build."""
-    meta = read_parquet_batch(spark, [f"{path}/meta"]).collect()[0]
+    (read from ``<path>/meta.json`` on the driver, no Spark job) so the
+    probe tokenizes identically to the build.  An index in the older
+    layout (a ``meta/`` Parquet table, no ``meta.json``) is not read:
+    rebuild it with :func:`write_gram_index`."""
+    meta = read_json(spark, f"{path}/meta.json")
     return read_parquet_batch(spark, [f"{path}/grams"]), int(meta["shingle_words"])
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 
 from parquet_merger_spark.partitioning import local_frame
 from parquet_merger_spark.sources.catalog import read_parquet_batch
+from parquet_merger_spark.sources.jsonfile import read_json, write_json
 
 QUANT_SCALE = 10_000
 
@@ -593,7 +594,9 @@ def write_ivf_index(
 def load_ivf_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
     """(centroids, bucketed_vectors) from :func:`write_ivf_index` output."""
     return (
-        spark.read.parquet(f"{path}/centroids"),
+        read_parquet_batch(spark, [f"{path}/centroids"]),
+        # hive-partitioned by bucket: read_parquet_batch would fall back to
+        # this same call, which infers the schema and partition columns
         spark.read.parquet(f"{path}/vectors"),
     )
 
@@ -1595,32 +1598,34 @@ def write_pq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Persist a PQ index: ``<path>/books`` (the one-row codebook model)
-    and ``<path>/codes`` (the m-byte encodings + recon2).  Build once,
-    probe many — the original float vectors are NOT part of the index;
-    keep them wherever they live for the optional exact-rerank join.
+    """Persist a PQ index: ``<path>/books.json`` (the codebook model, the
+    nested int lists :func:`train_pq_codebooks` returns, written on the
+    driver with no Spark job), then ``<path>/codes`` (the m-byte
+    encodings + recon2).  Indexes written in the older layout (a one-row
+    ``books/`` Parquet table) have no ``books.json`` and must be rebuilt.
+    Build once, probe many — the original float vectors are NOT part of
+    the index; keep them wherever they live for the optional exact-rerank
+    join.
 
     At 100 TB the codes table is ~100-300x smaller than the corpus, so a
     full ADC scan reads gigabytes, not terabytes."""
     books = train_pq_codebooks(corpus, m, n_codes, iters, id_col, vec_col)
-    _books_df(corpus.sparkSession, books).write.mode("overwrite").parquet(
-        f"{path}/books"
-    )
+    write_json(corpus.sparkSession, f"{path}/books.json", books)
     pq_encode(corpus, books, id_col, vec_col).write.mode("overwrite").parquet(
         f"{path}/codes"
     )
 
 
 def load_pq_index(spark, path: str) -> tuple[list[list[list[int]]], DataFrame]:
-    """(books, codes) from :func:`write_pq_index` output — ``books`` back
-    as the plain driver-side model (row -> nested lists), ``codes`` as the
-    encoded DataFrame ready for :func:`pq_topk`."""
-    row = read_parquet_batch(spark, [f"{path}/books"]).collect()[0]
-    books = [
-        [[int(x) for x in entry["cvec"]] for entry in sub_book]
-        for sub_book in row["__books"]
-    ]
-    return books, read_parquet_batch(spark, [f"{path}/codes"])
+    """(books, codes) from :func:`write_pq_index` output — ``books`` as
+    the plain driver-side model, read from ``<path>/books.json`` on the
+    driver with no Spark job, ``codes`` as the encoded DataFrame ready for
+    :func:`pq_topk`.  An index in the older layout (a ``books/`` Parquet
+    table, no ``books.json``) is not read: rebuild it with
+    :func:`write_pq_index`."""
+    return read_json(spark, f"{path}/books.json"), read_parquet_batch(
+        spark, [f"{path}/codes"]
+    )
 
 
 def kmeans_lloyd_portable(

@@ -1843,6 +1843,22 @@ def q_decontaminate(spark, sf_dir):
     )
 
 
+def _gram_index(spark, sf_dir, train):
+    """(grams, shingle_words) of the train-gram index persisted once per
+    (application, sf_dir), built from ``train`` when missing.  The gate is
+    the LAST file the writer produces (``meta.json`` follows ``grams/``):
+    a crash between the two writes triggers a rebuild, not a permanently
+    half-built index."""
+    from parquet_merger_spark.operators.dedup import load_gram_index, write_gram_index
+
+    idx = _scratch_dir(
+        spark, f"gram_index_{os.path.basename(sf_dir.rstrip('/'))}"
+    )
+    if not os.path.exists(os.path.join(idx, "meta.json")):
+        write_gram_index(train, idx, shingle_words=3)
+    return load_gram_index(spark, idx)
+
+
 def q_decontaminate_indexed(spark, sf_dir):
     """Same report through the PRODUCTION shape: the train-gram inverted
     index is persisted once per (application, sf_dir) by
@@ -1850,23 +1866,11 @@ def q_decontaminate_indexed(spark, sf_dir):
     built once over the train corpus and probed per eval-set release,
     never rebuilding the corpus-wide gram table.  Result is identical to
     ``decontaminate`` (same oracle), certifying the round-trip."""
-    from parquet_merger_spark.operators.dedup import (
-        contamination_probe,
-        load_gram_index,
-        write_gram_index,
-    )
+    from parquet_merger_spark.operators.dedup import contamination_probe
 
     d = _t(spark, sf_dir, "documents")
     is_train = F.col("source").isin([f"src{i}" for i in range(10)])
-    idx = _scratch_dir(
-        spark, f"gram_index_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
-    # gate on the LAST artifact the writer produces (meta/ follows
-    # grams/): a crash between the two writes must trigger a rebuild,
-    # not a permanently half-built index
-    if not os.path.exists(os.path.join(idx, "meta", "_SUCCESS")):
-        write_gram_index(d.filter(is_train), idx, shingle_words=3)
-    grams, sw = load_gram_index(spark, idx)
+    grams, sw = _gram_index(spark, sf_dir, d.filter(is_train))
     return contamination_probe(
         grams, d.filter(~is_train), shingle_words=sw, min_shared=5
     )
@@ -9084,20 +9088,11 @@ def q_decontaminate_bloom_probe(spark, sf_dir):
     ratio and plan shape are pinned in ``tests/test_round6.py``.  At
     100 TB this is the difference between shuffling the whole persisted
     gram index per eval release and shuffling only the matching slice."""
-    from parquet_merger_spark.operators.dedup import (
-        contamination_probe,
-        load_gram_index,
-        write_gram_index,
-    )
+    from parquet_merger_spark.operators.dedup import contamination_probe
 
     d = _t(spark, sf_dir, "documents")
     is_train = F.col("source").isin([f"src{i}" for i in range(10)])
-    idx = _scratch_dir(
-        spark, f"gram_index_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
-    if not os.path.exists(os.path.join(idx, "meta", "_SUCCESS")):
-        write_gram_index(d.filter(is_train), idx, shingle_words=3)
-    grams, sw = load_gram_index(spark, idx)
+    grams, sw = _gram_index(spark, sf_dir, d.filter(is_train))
     return contamination_probe(
         grams,
         d.filter(~is_train),

@@ -78,7 +78,8 @@ def test_pack_sequences_bin_offsets(spark):
 def test_gram_index_roundtrip_matches_direct(spark, tmp_path):
     """write_gram_index -> load_gram_index -> contamination_probe must
     reproduce ngram_contamination exactly (same grams, same df cap), so
-    the persisted build-once index is a pure performance rewrite."""
+    the persisted build-once index is a pure performance rewrite — also
+    at a ``file:`` URI, which goes through the Hadoop path handling."""
     from parquet_merger_spark.operators.dedup import (
         contamination_probe,
         load_gram_index,
@@ -111,17 +112,17 @@ def test_gram_index_roundtrip_matches_direct(spark, tmp_path):
     }
     assert direct, "fixture must produce at least one contaminated pair"
 
-    path = str(tmp_path / "gram_index")
-    write_gram_index(train, path, shingle_words=3)
-    grams, sw = load_gram_index(spark, path)
-    assert sw == 3
-    via_index = {
-        (r.test_id, r.train_id, r.shared_grams)
-        for r in contamination_probe(
-            grams, test, shingle_words=sw, min_shared=3
-        ).collect()
-    }
-    assert via_index == direct
+    for path in (str(tmp_path / "gram_index"), (tmp_path / "gram_index_uri").as_uri()):
+        write_gram_index(train, path, shingle_words=3)
+        grams, sw = load_gram_index(spark, path)
+        assert sw == 3
+        via_index = {
+            (r.test_id, r.train_id, r.shared_grams)
+            for r in contamination_probe(
+                grams, test, shingle_words=sw, min_shared=3
+            ).collect()
+        }
+        assert via_index == direct, path
 
     # the df cap is part of the persisted index, not the probe: a gram in
     # every train doc disappears when max_train_df=2
@@ -141,6 +142,53 @@ def test_gram_index_roundtrip_matches_direct(spark, tmp_path):
         ).collect()
     }
     assert capped == uncapped_direct
+
+
+def test_interrupted_gram_index_write_rebuilds(spark, monkeypatch):
+    """A crash while write_gram_index stores meta.json, after grams/ was
+    rewritten, leaves no meta.json behind: not the stale one, not a
+    partial one, not its temporary file.  So the next
+    q_decontaminate_indexed call rebuilds the index and returns the
+    oracle result, not a probe of the half-written grams/."""
+    import duckdb
+    import pytest
+
+    from parquet_merger_spark.operators.dedup import write_gram_index
+    from parquet_merger_spark.oracle import canon_rows, register_views
+    from parquet_merger_spark.queries import ORACLE_SQL, QUERIES, _scratch_dir
+    from parquet_merger_spark.sources import jsonfile
+
+    sf = "/root/testdata/sf0.001"
+    idx = _scratch_dir(spark, "gram_index_sf0.001")
+    # the model a complete earlier build left
+    jsonfile.write_json(
+        spark, os.path.join(idx, "meta.json"), {"shingle_words": 3, "max_train_df": 10_000}
+    )
+
+    def crash(fs, src, dest):
+        raise OSError("simulated crash before the rename")
+
+    monkeypatch.setattr(jsonfile, "_replace", crash)
+    unrelated = spark.createDataFrame(
+        [(1, "a train corpus that shares no gram with the eval set")],
+        "doc_id long, text string",
+    )
+    with pytest.raises(OSError, match="simulated crash"):
+        write_gram_index(unrelated, idx, shingle_words=3)
+    monkeypatch.undo()
+    assert not [n for n in os.listdir(idx) if "meta.json" in n]
+
+    got = QUERIES["decontaminate_indexed"](spark, sf).toPandas()
+    assert os.path.exists(os.path.join(idx, "meta.json"))
+    con = duckdb.connect()
+    try:
+        register_views(con, sf)
+        want = con.execute(ORACLE_SQL["decontaminate_indexed"]).df()
+    finally:
+        con.close()
+    assert len(want) > 0
+    assert sorted(got.columns) == sorted(want.columns)
+    assert canon_rows(got) == canon_rows(want)
 
 
 def test_dup_clusters_string_ids_propagate_fully(spark):

@@ -459,26 +459,36 @@ def test_read_parquet_batch_fallbacks_match_spark(spark, tmp_path):
             spark.conf.unset(key) if saved is None else spark.conf.set(key, saved)
 
 
-def test_index_loaders_start_one_job(spark, tmp_path, jobs_started):
-    """load_gram_index and load_pq_index read their index directories
-    with no schema-inference job: the one job each starts is the
-    collect of their one-row metadata table."""
+def test_persisted_index_job_pins(spark, tmp_path, jobs_started):
+    """The persisted indexes keep their driver-side models out of Spark:
+    write_gram_index and write_pq_index store theirs as a JSON file with
+    no Spark job (2 jobs each), and load_gram_index and load_pq_index
+    read it back, and their tables, with no job at all.  load_ivf_index starts 1: its centroids need no
+    schema-inference job, its hive-partitioned vectors/ still do."""
     from parquet_merger_spark.operators.dedup import load_gram_index, write_gram_index
-    from parquet_merger_spark.operators.simsearch import load_pq_index, write_pq_index
+    from parquet_merger_spark.operators.simsearch import (
+        load_ivf_index,
+        load_pq_index,
+        write_ivf_index,
+        write_pq_index,
+    )
 
     train = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog")],
         "doc_id long, text string",
     )
-    write_gram_index(train, str(tmp_path / "grams"), shingle_words=3)
     vecs = spark.createDataFrame(
         [(i, [float((i * j) % 5) for j in range(8)]) for i in range(16)],
         "vec_id long, embedding array<float>",
     )
-    write_pq_index(vecs, str(tmp_path / "pq"), m=4, n_codes=4, iters=1)
+    grams, pq, ivf = (str(tmp_path / d) for d in ("grams", "pq", "ivf"))
+    assert jobs_started(lambda: write_gram_index(train, grams, shingle_words=3)) == 2
+    assert jobs_started(lambda: write_pq_index(vecs, pq, m=4, n_codes=4, iters=1)) == 2
+    write_ivf_index(vecs, ivf, nlist=2)
 
-    assert jobs_started(lambda: load_gram_index(spark, str(tmp_path / "grams"))) == 1
-    assert jobs_started(lambda: load_pq_index(spark, str(tmp_path / "pq"))) == 1
+    assert jobs_started(lambda: load_gram_index(spark, grams)) == 0
+    assert jobs_started(lambda: load_pq_index(spark, pq)) == 0
+    assert jobs_started(lambda: load_ivf_index(spark, ivf)) == 1
 
 
 def test_probe_schemas_distributed_tier_parity(spark, tmp_path):

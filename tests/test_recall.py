@@ -422,7 +422,8 @@ def test_ivf_pq_composition(spark):
 def test_persisted_pq_index_roundtrip(spark, embeddings, tmp_path):
     """write_pq_index -> load_pq_index -> pq_topk over the loaded codes
     returns exactly what the in-memory build returns (books survive the
-    parquet round-trip bit-for-bit)."""
+    JSON round-trip bit-for-bit), also at a ``file:`` URI, which goes
+    through the Hadoop path handling."""
     from parquet_merger_spark.operators.simsearch import (
         load_pq_index,
         pq_encode,
@@ -442,17 +443,17 @@ def test_persisted_pq_index_roundtrip(spark, embeddings, tmp_path):
         ).collect()
     }
 
-    path = str(tmp_path / "pq_index")
-    write_pq_index(embeddings, path, m=32, n_codes=16, iters=1)
-    loaded_books, codes = load_pq_index(spark, path)
-    assert loaded_books == books
-    from_index = {
-        (r.query_id, r.vec_id, r.rank)
-        for r in pq_topk(
-            codes, q, loaded_books, k=10, rerank=embeddings
-        ).collect()
-    }
-    assert from_index == direct
+    for path in (str(tmp_path / "pq_index"), (tmp_path / "pq_index_uri").as_uri()):
+        write_pq_index(embeddings, path, m=32, n_codes=16, iters=1)
+        loaded_books, codes = load_pq_index(spark, path)
+        assert loaded_books == books, path
+        from_index = {
+            (r.query_id, r.vec_id, r.rank)
+            for r in pq_topk(
+                codes, q, loaded_books, k=10, rerank=embeddings
+            ).collect()
+        }
+        assert from_index == direct, path
 
 
 def test_pq_training_rejects_empty_and_bad_dims(spark, embeddings):
