@@ -56,13 +56,16 @@ eagerly; local[4]).  So with a checkpoint dir set, :func:`materialize`
 checkpoints EAGERLY whatever ``eager`` says: one job up front, and
 every consumer reads the files.
 
-The one remaining persist in the package is ``graph.triangle_count``'s
-four tables, released by hand on exit.  Ported to lazy barriers (and
-without its eager neighbour count) it ran 24 -> 17 jobs at sf0.01 with
-the same result, but a warm sf1 call (the second in a session, 4 cores,
-alternating processes) took 88.7 s and 72.8 s against 56.2 s and 60.0 s
-persisted: its large checkpoint blocks linger until the ContextCleaner
-frees them and slow the queries that follow.  So it keeps the persist.
+RELEASE: a local barrier's blocks stay until the ContextCleaner frees
+them, after a JVM garbage collection.  An operator calls :func:`release`
+on each barrier nothing it returns still reads (``dup_clusters``: each
+finished round, then its edge and adjacency tables); ``pagerank_int``
+releases none, since its lazy result reads them all.
+
+``graph.triangle_count`` keeps the package's one persist (four tables,
+unpersisted on exit): ported to released barriers it was still slower
+at sf1 (warm, 4 cores: 49.7 s against 40.8 s, min of 3 alternating
+processes).
 """
 
 from __future__ import annotations
@@ -95,3 +98,31 @@ def materialize_lazy(df: DataFrame) -> DataFrame:
     """:func:`materialize` with ``eager=False`` — a named partial so call
     sites can stay method-chained via ``.transform(materialize_lazy)``."""
     return materialize(df, eager=False)
+
+
+def release(*dfs: DataFrame) -> None:
+    """Free the blocks of checkpoint barriers now.  Each frame must BE a
+    barrier (its analyzed plan a ``LogicalRDD``), else ``ValueError``
+    before anything is freed.  Reading a released local barrier fails.
+    A reliable barrier holds no blocks: its files stay until
+    ``cleanCheckpoints`` (set by ``session.get_spark``) deletes them."""
+    plans = [df._jdf.queryExecution().analyzed() for df in dfs]
+    for plan in plans:
+        if plan.nodeName() != "LogicalRDD":
+            raise ValueError(f"not a checkpoint barrier: a {plan.nodeName()} plan")
+    for df, plan in zip(dfs, plans):
+        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(plan.rdd().id(), True)
+
+
+def barriers_of(df: DataFrame) -> list[DataFrame]:
+    """The checkpoint barriers ``df``'s plan reads, as :func:`release`
+    takes them: for a caller that owns every barrier below an
+    operator's lazy output and no longer reads it."""
+    spark = df.sparkSession
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    of_rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+    return [
+        DataFrame(of_rows(spark._jsparkSession, leaf), spark)
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.nodeName() == "LogicalRDD"
+    ]

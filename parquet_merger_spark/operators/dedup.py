@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from parquet_merger_spark.barrier import materialize, materialize_lazy
+from parquet_merger_spark.barrier import materialize, materialize_lazy, release
 from parquet_merger_spark.partitioning import fan_out
 from parquet_merger_spark.sources.catalog import read_parquet_batch
 from parquet_merger_spark.sources.jsonfile import delete_json, read_json, write_json
@@ -35,28 +35,6 @@ from parquet_merger_spark.sources.jsonfile import delete_json, read_json, write_
 
 def tokens_col(text: Column | str, sep: str = " ") -> Column:
     return F.split(text, sep)
-
-
-def word_ngrams(tokens: Column, n: int) -> Column:
-    """Word n-grams as strings; empty array when the doc has fewer than
-    n tokens.
-
-    Built as iterated ``zip_with`` over SLICED arrays, never
-    ``transform(sequence) + element_at``: when ``tokens`` is an
-    unmaterialized expression (the common ``F.split(text)`` call site),
-    per-index ``element_at`` re-evaluates that expression on every
-    access — measured 13x slower at sf1 on the bigram-familiarity
-    gram build.  The slice/zip_with form evaluates ``tokens`` once per
-    slice regardless of what the caller passes."""
-    num = F.greatest(F.size(tokens) - (n - 1), F.lit(0))
-    acc = F.slice(tokens, 1, num)
-    for j in range(1, n):
-        acc = F.zip_with(
-            acc,
-            F.slice(tokens, j + 1, num),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-    return acc
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
@@ -802,7 +780,8 @@ def dup_clusters(
     :func:`materialize_lazy`, not a persist: the call leaves no
     CacheManager entry behind, and every loop scan of the adjacency is a
     plain RDD scan, where AQE turned each scan of a cached relation into
-    a job of its own.
+    a job of its own.  Each is released (round r-1's labels after round
+    r's convergence collect) once nothing the call returns reads it.
     """
     edges = (
         pairs.select(
@@ -870,6 +849,7 @@ def dup_clusters(
         )
 
     converged = False
+    last_round = None
     for _ in range(max_iters):
         cur = labels
         for _ in range(max(1, steps_per_round)):
@@ -878,7 +858,7 @@ def dup_clusters(
         prev = labels.select(
             F.col("node").alias("__pnode"), F.col("label").alias("__plabel")
         )
-        labels = (
+        this_round = (
             cur.join(prev, cur.node == F.col("__pnode"))
             .select(
                 "node",
@@ -887,13 +867,20 @@ def dup_clusters(
             )
             .transform(materialize_lazy)
         )
-        n_changed = labels.agg(
+        n_changed = this_round.agg(
             F.count_if(F.col("__changed")).alias("c")
         ).collect()[0][0]
-        labels = labels.drop("__changed")
+        # the collect checkpointed this round's labels and cut their
+        # lineage, so nothing reads the previous round's any more
+        if last_round is not None:
+            release(last_round)
+        last_round = this_round
+        labels = this_round.drop("__changed")
         if n_changed == 0:
             converged = True
             break
+    # the last round's labels no longer read the edges or the adjacency
+    release(edges, adj)
     if not converged:
         # Returning silently would split one true component into several
         # "clusters" — and the survivor pass downstream would then keep

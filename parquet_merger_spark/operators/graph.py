@@ -38,6 +38,10 @@ from parquet_merger_spark.barrier import materialize, materialize_lazy
 
 SCALE = 1_000_000
 
+# triangle_count: at or under this many (oriented) edges, its degree and
+# adjacency-array joins broadcast; above it they shuffle on the vertex key
+BROADCAST_EDGE_LIMIT = 5_000_000
+
 
 def pagerank_int(
     edges: DataFrame,
@@ -146,7 +150,6 @@ def triangle_count(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    broadcast_edge_limit: int = 5_000_000,
     shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Exact global triangle count over an undirected edge list, by
@@ -178,8 +181,8 @@ def triangle_count(
     Ties in degree break by node id, so the orientation — and every
     intermediate — is fully deterministic.
 
-    ``broadcast_edge_limit``: when the ORIENTED edge set fits under this
-    row count, the adjacency-array joins run as broadcast hash joins and
+    When the ORIENTED edge set fits under ``BROADCAST_EDGE_LIMIT`` rows,
+    the degree and adjacency-array joins run as broadcast hash joins and
     the whole count stays in one stage.  Above the limit — the true
     100 TB regime, where E itself is sharded — they fall back to shuffle
     equi-joins on the vertex key; orientation bounds every out-neighbor
@@ -203,18 +206,7 @@ def triangle_count(
     version set/restored ``spark.sql.shuffle.partitions``, which leaked
     to concurrent threads for the duration of the call).
     """
-    return _triangle_count_body(
-        edges, src_col, dst_col, broadcast_edge_limit, shuffle_partitions
-    )
 
-
-def _triangle_count_body(
-    edges: DataFrame,
-    src_col: str,
-    dst_col: str,
-    broadcast_edge_limit: int,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
     def _shard(df: DataFrame, *cols: str) -> DataFrame:
         # the hint: pin THIS operator's shuffle width by hash-partitioning
         # on the exact keys the next aggregation/join requires — Spark's
@@ -271,16 +263,14 @@ def _triangle_count_body(
     lower_first = (F.col("dega") < F.col("degb")) | (
         (F.col("dega") == F.col("degb")) & (F.col("a") < F.col("b"))
     )
-    # gate the O(V) degree broadcast on the SAME sharded-regime limit as
-    # the adjacency joins (V <= 2E): an unconditional broadcast hint
+    # one broadcast gate for the O(V) degree joins and the adjacency
+    # joins below (V <= 2E): an unconditional broadcast hint
     # bypasses autoBroadcastJoinThreshold/AQE, and above the limit the
     # degree table is as unbroadcastable as the edges themselves
-    maybe_deg_b = (
-        F.broadcast if n_edges <= broadcast_edge_limit else (lambda df: df)
-    )
+    maybe_b = F.broadcast if n_edges <= BROADCAST_EDGE_LIMIT else (lambda df: df)
     oriented = (
-        e.join(maybe_deg_b(da), "a")
-        .join(maybe_deg_b(db), "b")
+        e.join(maybe_b(da), "a")
+        .join(maybe_b(db), "b")
         .select(
             F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("s"),
             F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("t"),
@@ -303,14 +293,11 @@ def _triangle_count_body(
     # |oriented| == |e| exactly (orientation maps each undirected edge to
     # ONE directed edge — the join is key-preserving and lower_first is
     # total), so the broadcast-vs-shuffle decision for the adjacency
-    # joins reuses n_edges and the r09 oriented.count() barrier job is
-    # gone (guide §1.2: don't pay for a number you already have); above
-    # the limit both joins become shuffle equi-joins on the vertex key —
-    # the sharded regime; orientation still bounds every array at
-    # O(sqrt E)
-    maybe_b = (
-        F.broadcast if n_edges <= broadcast_edge_limit else (lambda df: df)
-    )
+    # joins reuses n_edges (``maybe_b`` above) and the r09
+    # oriented.count() barrier job is gone (guide §1.2: don't pay for a
+    # number you already have); above the limit both joins become
+    # shuffle equi-joins on the vertex key — the sharded regime;
+    # orientation still bounds every array at O(sqrt E)
     # persisted + eagerly materialized: THREE consumers (the wedge-count
     # aggregate and the differently-aliased ns/nt broadcast projections)
     # would otherwise each rerun the O(E) collect_list shuffle — aliased

@@ -64,9 +64,9 @@ from parquet_merger_spark.operators.textstats import (
 )
 from parquet_merger_spark.operators.export import drop_internal_columns
 from parquet_merger_spark.functions.strings import sanitize_filename_col
-from parquet_merger_spark.session import pin_oracle_confs
+from parquet_merger_spark.session import own_scratch_root, pin_oracle_confs
 from parquet_merger_spark.sources.catalog import read_parquet_batch
-from parquet_merger_spark.barrier import materialize, materialize_lazy
+from parquet_merger_spark.barrier import barriers_of, materialize, materialize_lazy, release
 from parquet_merger_spark.partitioning import scaled_partitions
 from parquet_merger_spark.streaming.events import (
     session_window_agg,
@@ -142,14 +142,14 @@ def _scratch_dir(spark: SparkSession, name: str) -> str:
     APPLICATION: two concurrent harness runs (distinct application ids)
     can never race on each other's files, while repeated calls within one
     session reuse-and-overwrite the same directory — disk stays bounded
-    and the determinism re-run reads its own fresh write."""
+    and the determinism re-run reads its own fresh write.  The root is
+    removed when the process exits (:func:`session.own_scratch_root`)."""
     import tempfile
 
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"pm_spark_{spark.sparkContext.applicationId}",
-        name,
+    root = os.path.join(
+        tempfile.gettempdir(), f"pm_spark_{spark.sparkContext.applicationId}"
     )
+    return os.path.join(own_scratch_root(root), name)
 
 
 # --------------------------------------------------------------------------
@@ -1503,43 +1503,6 @@ def q_hll_rollup(spark, sf_dir):
     )
 
 
-def q_trend_fit(spark, sf_dir):
-    """Per-group least-squares trend: slope+intercept of daily event
-    count over day index, per event type — the regression twin of
-    corr_matrix, same bit-stable recipe (exact integer sufficient
-    statistics reduced per group, closed-form doubles at the end).
-    Two aggregates (daily rollup, then per-type stats); both shuffles
-    are map-side partial."""
-    e = _events(spark, sf_dir)
-    day0 = F.lit(19723)  # 2024-01-01 as epoch-day; keeps x small+exact
-    daily = (
-        e.withColumn(
-            "x", (F.floor(F.col("ts").cast("long") / 86400) - day0).cast("long")
-        )
-        .groupBy("event_type", "x")
-        .agg(F.count(F.lit(1)).alias("y"))
-    )
-    st = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    n = F.col("n").cast("double")
-    sx = F.col("sx").cast("double")
-    sy = F.col("sy").cast("double")
-    sxy = F.col("sxy").cast("double")
-    sxx = F.col("sxx").cast("double")
-    slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    return st.select(
-        "event_type",
-        "n",
-        F.round(slope, 6).alias("slope"),
-        F.round((sy - slope * sx) / n, 6).alias("intercept"),
-    )
-
-
 def q_scd2_asof_lookup(spark, sf_dir):
     """Point-in-time dimension lookup: facts stamped with a snapshot id
     join the SCD2 customer versions whose [valid_from, valid_to)
@@ -2042,7 +2005,11 @@ def q_dedup_clusters(spark, sf_dir):
     dropping (pairs alone over-delete transitive groups)."""
     d = _t(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(d, shingle_words=2, threshold=0.8)
-    return dup_clusters(pairs)
+    clusters = dup_clusters(pairs)
+    # the pair operator's shingle and prefix barriers: the clusters are
+    # checkpointed and no longer read them, and d is a plain scan
+    release(*barriers_of(pairs))
+    return clusters
 
 
 def q_dedup_survivors(spark, sf_dir):
@@ -2050,7 +2017,9 @@ def q_dedup_survivors(spark, sf_dir):
     one canonical (smallest-id) doc per cluster."""
     d = _t(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(d, shingle_words=2, threshold=0.8)
-    return near_dedup_survivors(d, pairs).select("doc_id", "n_chars")
+    out = near_dedup_survivors(d, pairs).select("doc_id", "n_chars")
+    release(*barriers_of(pairs))  # as in q_dedup_clusters
+    return out
 
 
 def q_dedup_survivors_longest(spark, sf_dir):
@@ -2063,9 +2032,11 @@ def q_dedup_survivors_longest(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(d, shingle_words=2, threshold=0.8)
-    return near_dedup_survivors_by(
+    out = near_dedup_survivors_by(
         d, pairs, order_by=[F.desc("n_chars")]
     ).select("doc_id", "n_chars")
+    release(*barriers_of(pairs))  # as in q_dedup_clusters
+    return out
 
 
 def q_dedup_minhash_lsh(spark, sf_dir):
@@ -6001,7 +5972,9 @@ def q_dedup_pipeline_lsh(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(d, num_hashes=64, bands=16, threshold=0.5)
-    return near_dedup_survivors(d, pairs).select("doc_id", "n_chars")
+    out = near_dedup_survivors(d, pairs).select("doc_id", "n_chars")
+    release(*barriers_of(pairs))  # as in q_dedup_clusters
+    return out
 
 
 QUERIES["dedup_pipeline_lsh"] = q_dedup_pipeline_lsh
@@ -9555,6 +9528,7 @@ def q_split_leakage_guard(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(d, shingle_words=2, threshold=0.8)
     clusters = dup_clusters(pairs)
+    release(*barriers_of(pairs))  # as in q_dedup_clusters
     labeled = (
         d.select("doc_id", "n_chars")
         .join(clusters, "doc_id", "left")

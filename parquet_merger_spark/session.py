@@ -8,11 +8,29 @@ UTC-naive engines like DuckDB), Arrow enabled for the Pandas-UDF path.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# scratch roots this process made for itself, removed when it exits; a
+# path a caller passes in (an index, a sink) is never recorded here
+_SCRATCH_ROOTS: set[str] = set()
+
+
+def own_scratch_root(root: str) -> str:
+    """Record ``root`` for removal at interpreter exit; returns it."""
+    _SCRATCH_ROOTS.add(root)
+    return root
+
+
+@atexit.register
+def _remove_scratch_roots() -> None:
+    for root in _SCRATCH_ROOTS:
+        shutil.rmtree(root, ignore_errors=True)
 
 # glibc malloc tuning for the LONG-LIVED Python workers (they inherit the
 # driver's environment through the JVM -> pyspark.daemon fork chain, so this
@@ -244,7 +262,7 @@ def _zip_package(pkg_dir: str | None = None) -> str:
     # mkdtemp: random name, 0700, created with O_EXCL semantics — nothing
     # to pre-plant, nothing stale to pick up
     out = os.path.join(
-        tempfile.mkdtemp(prefix="pm_spark_pyfiles_"),
+        own_scratch_root(tempfile.mkdtemp(prefix="pm_spark_pyfiles_")),
         f"parquet_merger_spark_{digest}.zip",
     )
     with zipfile.ZipFile(out, "w") as z:

@@ -66,6 +66,48 @@ def test_zip_package_content_addressed(tmp_path):
         assert b"return 1" in z.read("fakepkg/sub/mod.py")
 
 
+_SCRATCH_AT_EXIT = r"""
+import os, sys, tempfile
+sys.path.insert(0, {root!r})
+from parquet_merger_spark.session import get_spark, ship_package
+from parquet_merger_spark.queries import QUERIES, _t
+from parquet_merger_spark.operators.dedup import write_gram_index
+
+spark = get_spark("pm-scratch-exit", cpus=2, shuffle_partitions=2)
+spark.sparkContext.setLogLevel("ERROR")
+for key in ("decontaminate_indexed", "stream_dedup"):
+    assert QUERIES[key](spark, {sf!r}).count() > 0
+ship_package(spark)
+write_gram_index(
+    _t(spark, {sf!r}, "documents"), os.path.join(tempfile.gettempdir(), "caller_index")
+)
+print("\n".join(sorted(os.listdir(tempfile.gettempdir()))))
+"""
+
+
+def test_scratch_roots_removed_at_exit(tmp_path):
+    """A process removes the scratch roots it made when it exits: the
+    queries' per-application dir (an index key and a stream key both
+    write there) and the shipped-source zip's dir.  An index path the
+    caller passed in stays."""
+    from conftest import SF_SMOKE
+
+    out = subprocess.run(
+        [sys.executable, "-c", _SCRATCH_AT_EXIT.format(root=ROOT, sf=SF_SMOKE)],
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    during = out.stdout.split()
+    assert any(n.startswith("pm_spark_local-") for n in during), during
+    assert any(n.startswith("pm_spark_pyfiles_") for n in during), during
+    left = sorted(os.listdir(tmp_path))
+    assert not [n for n in left if n.startswith("pm_spark_")], left
+    assert os.path.exists(tmp_path / "caller_index" / "meta.json")
+
+
 def test_module_level_kernel_on_real_executors():
     """A module-referenced applyInPandas kernel (the exact shape that
     failed pre-fix) must run on real executor JVMs once ship_package has

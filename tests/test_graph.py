@@ -121,22 +121,38 @@ def _tri(spark, edges):
     return triangle_count(e).collect()[0].asDict()
 
 
+K4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+# square 0-1-2-3 with diagonal 0-2 => two triangles (0,1,2) (0,2,3)
+SQUARE_PLUS_DIAGONAL = [(0, 1), (1, 2), (2, 3), (3, 0), (0, 2)]
+
+
 def test_triangle_count_k4(spark):
     """K4: 4 vertices, 6 edges, C(4,3)=4 triangles; oriented wedge count
     for a complete graph is also C(4,3) * ... pinned by enumeration."""
-    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
-    got = _tri(spark, k4)
+    got = _tri(spark, K4)
     assert got["n_vertices"] == 4
     assert got["n_edges"] == 6
     assert got["n_triangles"] == 4
 
 
 def test_triangle_count_square_plus_diagonal(spark):
-    # square 0-1-2-3 with diagonal 0-2 => two triangles (0,1,2) (0,2,3)
-    edges = [(0, 1), (1, 2), (2, 3), (3, 0), (0, 2)]
-    got = _tri(spark, edges)
+    got = _tri(spark, SQUARE_PLUS_DIAGONAL)
     assert got["n_edges"] == 5
     assert got["n_triangles"] == 2
+
+
+@pytest.mark.parametrize(
+    "edges", [K4, SQUARE_PLUS_DIAGONAL], ids=["k4", "square_plus_diagonal"]
+)
+def test_triangle_count_shuffle_join_regime(spark, monkeypatch, edges):
+    """Above ``BROADCAST_EDGE_LIMIT`` the degree and adjacency joins
+    shuffle on the vertex key instead of broadcasting; the census is the
+    same as on the broadcast path."""
+    from parquet_merger_spark.operators import graph
+
+    broadcast = _tri(spark, edges)
+    monkeypatch.setattr(graph, "BROADCAST_EDGE_LIMIT", 0)
+    assert _tri(spark, edges) == broadcast
 
 
 def test_triangle_count_triangle_free_cycle(spark):

@@ -648,6 +648,7 @@ _JOB_PINS = [
     ("time_to_first_purchase", 9),
     ("dedup_clusters", 31),
     ("semdedup", 35),
+    ("graph_triangles", 24),
 ]
 
 
@@ -668,8 +669,9 @@ def test_query_job_pins(spark, jobs_started, name, max_jobs):
     count-table pass and one join per quantile.  dedup_clusters and
     semdedup share the connected-components loop's edge and adjacency
     tables through checkpoints, so no propagation step scans a cached
-    relation.  The ids name the key only, so lowering a pin keeps the
-    test's name."""
+    relation.  graph_triangles' ceiling is its count with four eager
+    persists (a barrier port ran 16-17 but was slower at sf1).  The ids
+    name the key only, so lowering a pin keeps the test's name."""
     assert jobs_started(lambda: QUERIES[name](spark, SF_DIR).collect()) <= max_jobs
 
 
@@ -695,3 +697,55 @@ def test_shared_intermediates_leave_no_cache_entry(spark, name):
     spark.catalog.clearCache()  # earlier tests' entries are not this call's
     QUERIES[name](spark, SF_SMOKE).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "graph_triangles",
+        "dedup_clusters",
+        "dedup_survivors",
+        "dedup_survivors_longest",
+        "dedup_pipeline_lsh",
+        "split_leakage_guard",
+    ],
+)
+def test_call_leaves_only_its_result_blocks(spark, name):
+    """Caller hygiene for block storage: the checkpoint barriers a key
+    shares its tables through are released once nothing it returns reads
+    them, so the call adds at most the returned frame's own barrier to
+    the RDD storage.  A wrong release makes the second read, after
+    ``gc.collect()``, fail."""
+    import gc
+
+    from parquet_merger_spark.barrier import barriers_of
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def stored() -> set[int]:
+        return {info.id() for info in sc.getRDDStorageInfo()}
+
+    before = stored()
+    df = QUERIES[name](spark, SF_SMOKE)
+    rows = sorted(df.collect())
+    added = stored() - before
+    own = {b._jdf.queryExecution().analyzed().rdd().id() for b in barriers_of(df)}
+    assert len(added) <= 1 and added <= own, (added, own)
+    gc.collect()
+    assert sorted(df.collect()) == rows
+
+
+def test_release_takes_only_barriers(spark):
+    """``release`` decides from the plan: a frame derived from a barrier
+    is not one, so the call raises before it frees anything.  A released
+    barrier then fails loudly when read."""
+    from parquet_merger_spark.barrier import materialize_lazy, release
+
+    b = spark.range(0, 10, 1, 2).transform(materialize_lazy)
+    assert b.count() == 10
+    with pytest.raises(ValueError):
+        release(b, b.select("id"))
+    assert b.count() == 10
+    release(b)
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        b.count()

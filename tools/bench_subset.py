@@ -15,6 +15,7 @@ AND run-to-run variance, which the one-shot sweep cannot.
 from __future__ import annotations
 
 import argparse
+import glob
 import os
 import statistics
 import sys
@@ -43,9 +44,11 @@ def main() -> None:
     spark = get_spark("pm-bench-subset", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # same warm-up as bench.py: JVM/IO path + python worker daemon
-    warm = spark.read.parquet(os.path.join(SF_DIR, "region.parquet"))
-    warm.count()
+    # same warm-up as bench.py: JVM/IO path + python worker daemon, on
+    # the smallest table present (a generated sf1 dir holds only the
+    # tables its keys read, not region)
+    warm = min(glob.glob(os.path.join(SF_DIR, "*.parquet")), key=os.path.getsize)
+    spark.read.parquet(warm).count()
     spark.range(0, cpus, 1, cpus).mapInPandas(lambda it: it, "id long").count()
 
     for name in args.keys:

@@ -13,6 +13,7 @@ touching anything.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import sys
@@ -50,8 +51,9 @@ def main() -> None:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    warm = spark.read.parquet(os.path.join(SF_DIR, "region.parquet"))
-    warm.count()
+    # the smallest table present: a generated sf1 dir has no region
+    warm = min(glob.glob(os.path.join(SF_DIR, "*.parquet")), key=os.path.getsize)
+    spark.read.parquet(warm).count()
     spark.range(0, cpus, 1, cpus).mapInPandas(lambda it: it, "id long").count()
 
     sc = spark.sparkContext
