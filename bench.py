@@ -16,9 +16,11 @@ import json
 import os
 import re
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
+
+from artifact import free_slot  # noqa: E402
+from keyrun import timed, warm  # noqa: E402
 
 from parquet_merger_spark.queries import QUERIES  # noqa: E402
 from parquet_merger_spark.session import get_spark, warm_engine  # noqa: E402
@@ -309,42 +311,20 @@ def main() -> None:
     spark = get_spark("pm-bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Warm the JVM/IO path once so q1 doesn't pay session-startup costs,
-    # and the Python-worker/Arrow path so the first pandas-UDF query
-    # doesn't pay interpreter spin-up (both are per-session setup, not
-    # steady-state operator cost).
-    warm = spark.read.parquet(os.path.join(sf_dir, "region.parquet"))
-    warm.count()
-    # one partition per core: daemon forks ALL python workers up front,
-    # not just the one the single-partition table would touch
-    spark.range(0, cpus, 1, cpus).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
+    # per-session setup, not steady-state operator cost: JVM/IO path and
+    # every Python worker (keyrun.warm), then the engine's shared runtime
+    # paths (warm_engine)
+    warm(spark, sf_dir)
     # r11: full engine warm-up (shuffle/sort/window/Arrow/parquet-write
     # JIT + executor memory first-touch) — kills the first-heavy-key
     # session tax that landed ~2-15s on ONE key per window (r10 verdict
     # #2; measurement + A/B in session.warm_engine's docstring).  Runs
     # BEFORE the canaries and the index prebuilds, outside every timed
-    # window; the per-key timed region below is byte-identical to r03+.
+    # window; the per-key timed region is keyrun.timed.
     warm_engine(spark, cpus)
 
     def run_once(name: str) -> float:
-        # per-query cache isolation: earlier queries' persisted frames
-        # pile up in the CacheManager, and every subsequent plan
-        # analysis walks those entries — measured +85% on the
-        # persist-heavy pagerank after just 40 prior keys (5.7s vs 3.1s
-        # cleared).  Clearing between keys measures each query's OWN
-        # cost; persisted ON-DISK indexes (the *_indexed keys) are
-        # untouched.  The clear runs outside the timed window.
-        spark.catalog.clearCache()
-        # time build + action together: queries that materialize inside
-        # their builder (iterative operators with lazy localCheckpoint,
-        # index-building paths) would otherwise run their real work
-        # OUTSIDE the timed window and report near-zero
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3)
+        return timed(spark, QUERIES[name], sf_dir)[0]
 
     # host-health self-qualification (r05 verdict ask #5): record the
     # first-touch canary around the timed sweep so r-over-r diffs can
@@ -500,17 +480,9 @@ def main() -> None:
     # worse window is preserved to BENCH_local_r{NN}_rejected.json
     # instead — r08 learned this the hard way when a fault-dominated
     # retry overwrote the round's one near-clean window in place.
-    def _numbered(base: str, tag: str) -> str:
-        # never overwrite an earlier diverted window: every diversion
-        # gets its own numbered slot (r08's single _rejected slot lost
-        # evidence — only the LAST of >=3 rejected windows survived)
-        n = 1
-        while True:
-            cand = base.replace(".json", f"_{tag}{n}.json")
-            if not os.path.exists(cand):
-                return cand
-            n += 1
-
+    # never overwrite an earlier diverted window: every diversion gets
+    # its own numbered slot (r08's single _rejected slot lost evidence —
+    # only the LAST of >=3 rejected windows survived)
     if os.path.exists(local):
         try:
             with open(local) as fh:
@@ -521,7 +493,7 @@ def main() -> None:
             # a different-SF run is a smoke/experiment, never the round's
             # sf-record — divert it under its own name (NOT 'rejected':
             # that tag means 'worse window, same sf')
-            local = _numbered(local, "smoke")
+            local = free_slot(local, "smoke")
             print(
                 f"# different sf ({out['sf']} vs standing {prev.get('sf')}); "
                 f"this run -> {os.path.basename(local)}",
@@ -539,7 +511,7 @@ def main() -> None:
                 )
             )
         ):
-            local = _numbered(local, "rejected")
+            local = free_slot(local, "rejected")
             print(
                 f"# standing artifact has a better/equal window "
                 f"(class {_canary_class(prev)}, {prev.get('value')}s); "
@@ -553,7 +525,6 @@ def main() -> None:
     # never go a round stale again (the rotation itself no longer reads
     # it — __spark_entry__ folds the per-round files directly)
     try:
-        sys.path.insert(0, os.path.join(here, "tools"))
         from correctness_cum import merge as _cum_merge
         from correctness_cum import write_cum as _cum_write
 

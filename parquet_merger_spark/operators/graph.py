@@ -150,7 +150,6 @@ def triangle_count(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Exact global triangle count over an undirected edge list, by
     DEGREE-ORDERED ORIENTATION (the classic wedge-check algorithm:
@@ -188,44 +187,13 @@ def triangle_count(
     equi-joins on the vertex key; orientation bounds every out-neighbor
     array at O(sqrt E), so the per-row intersect work — and the total
     O(E^1.5) — survives the scale-up.
-
-    ``shuffle_partitions``: partition count for the operator's internal
-    shuffles (default ``None`` = session conf).  The r08 measurement
-    (CORE_SCALING_r07 + the r08 triangles probe, sf1 AND sf10): the
-    heavy stages here are ALLOCATION-bound (per-task array builds for
-    collect_list/array_intersect), so beyond ~1 task per 2 cores extra
-    partitions only multiply allocation pressure — 32 cores at 16
-    partitions matched 16 cores at 16 partitions, while 32 partitions
-    was measurably slower.  On a big cluster size this to ~cores/2 for
-    the triangle stage rather than inheriting a large global default.
-    Applied as explicit hash ``repartition(n, keys)`` on the operator's
-    own shuffle boundaries (dedup, degree agg, adjacency agg) — the
-    aggregations and downstream joins reuse that distribution, so no
-    extra exchange is introduced and NOTHING session-global is touched:
-    concurrent queries on the same session are unaffected (r10; the r09
-    version set/restored ``spark.sql.shuffle.partitions``, which leaked
-    to concurrent threads for the duration of the call).
     """
-
-    def _shard(df: DataFrame, *cols: str) -> DataFrame:
-        # the hint: pin THIS operator's shuffle width by hash-partitioning
-        # on the exact keys the next aggregation/join requires — Spark's
-        # EnsureRequirements sees the distribution is already satisfied
-        # and adds no further exchange (same shuffle count, chosen width)
-        if shuffle_partitions is None:
-            return df
-        return df.repartition(shuffle_partitions, *[F.col(c) for c in cols])
 
     u, v = F.col(src_col), F.col(dst_col)
     # canonical undirected edges (a < b), self-loops dropped
     e = (
-        _shard(
-            edges.select(
-                F.least(u, v).alias("a"), F.greatest(u, v).alias("b")
-            ).filter(F.col("a") != F.col("b")),
-            "a",
-            "b",
-        )
+        edges.select(F.least(u, v).alias("a"), F.greatest(u, v).alias("b"))
+        .filter(F.col("a") != F.col("b"))
         .distinct()
         # persisted + eagerly materialized (NOT localCheckpoint):
         # degrees AND orientation both scan it and the upstream
@@ -243,12 +211,7 @@ def triangle_count(
     # ReuseExchange, and concurrent broadcast builds race a cold cache
     # (the dup_clusters pathology)
     deg = (
-        _shard(
-            e.select(
-                F.explode(F.array(F.col("a"), F.col("b"))).alias("node")
-            ),
-            "node",
-        )
+        e.select(F.explode(F.array(F.col("a"), F.col("b"))).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
         .persist()
@@ -304,8 +267,7 @@ def triangle_count(
     # projections defeat ReuseExchange and concurrent broadcast builds
     # race a cold cache (SURVEY §9.9)
     out_nbrs = (
-        _shard(oriented, "s")
-        .groupBy("s")
+        oriented.groupBy("s")
         .agg(
             F.sort_array(F.collect_list("t")).alias("nb"),
             F.count(F.lit(1)).alias("od"),

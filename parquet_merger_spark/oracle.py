@@ -4,7 +4,8 @@ One implementation of the driver-style compare used by BOTH the local
 test suite (`tests/test_oracle.py`) and the committed full-coverage
 sweep (`tools/correctness_local.py`) — the two must never drift, or the
 committed CORRECTNESS artifact and the suite could disagree about the
-same query output.
+same query output.  ``compare_frames`` is the one compare row every
+tool records.
 
 Rules (mirroring the driver): columns sorted by name, rows sorted, cells
 rendered as strings with NULL/NaN collapsed to one token, floats in a
@@ -56,6 +57,23 @@ def canon_hash(df: pd.DataFrame) -> str:
         h.update("\x1f".join(r).encode())
         h.update(b"\x1e")
     return h.hexdigest()
+
+
+def compare_frames(sdf: pd.DataFrame, ddf: pd.DataFrame) -> dict:
+    """One key's compare row against its oracle: row count, column set,
+    then the canonical value hash (checked only when both of those
+    match)."""
+    rows_match = len(sdf) == len(ddf)
+    schema_match = sorted(sdf.columns) == sorted(ddf.columns)
+    return {
+        "rows_match": rows_match,
+        "schema_match": schema_match,
+        "hash_match": (
+            rows_match and schema_match and canon_hash(sdf) == canon_hash(ddf)
+        ),
+        "spark_rows": int(len(sdf)),
+        "oracle_rows": int(len(ddf)),
+    }
 
 
 def register_views(con, sf_dir: str) -> None:

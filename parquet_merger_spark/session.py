@@ -285,10 +285,11 @@ def warm_engine(spark, cpus: int | None = None) -> float:
     window — key-order swaps moved the tax with the ORDER, not the key,
     and a profiled first `write_gram_index` read 3.6s against a 1.1s
     warm sum of its own stages.  Interpreter/JIT + first-touch of
-    executor working memory, not plan cost.  A/B with this warm-up
-    (tools/firstkey_probe.py): first dedup_ngram_jaccard 6.4s -> 4.8s in
-    the same host phase; the remaining gap to the ~3s warm floor is the
-    key's own first-iteration cache build.  Costs ~4-6s once per
+    executor working memory, not plan cost.  A/B with this warm-up, by a
+    one-off first-key probe since deleted (bench always runs this
+    warm-up now): first dedup_ngram_jaccard 6.4s -> 4.8s in the same
+    host phase; the remaining gap to the ~3s warm floor is the key's own
+    first-iteration cache build.  Costs ~4-6s once per
     session, OUTSIDE any timed window — per-session setup, not
     steady-state operator cost, same rationale as the existing
     Python-worker prefork.  Returns its own wall seconds."""

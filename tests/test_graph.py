@@ -188,24 +188,3 @@ def test_triangle_count_self_loops_only_returns_zeros(spark):
         "n_triangles": 0,
     }
 
-
-def test_triangle_count_shuffle_partitions_hint(spark):
-    """r09 (verdict #6): the allocation-bound triangle stages accept an
-    explicit shuffle-partition hint (r08 probe: 16p matched or beat 32p
-    at sf1/sf10 on 32 cores).  r10 (advisor): the hint is applied as
-    key-scoped ``repartition(n, keys)`` on the operator's own shuffle
-    boundaries, so it must (a) not change the census, (b) never touch
-    the session conf at all — concurrent queries see nothing."""
-    edges = [(0, 1), (1, 2), (0, 2), (2, 3), (3, 0), (1, 3)]  # K4
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = triangle_count(df, shuffle_partitions=4).collect()[0].asDict()
-    assert got["n_triangles"] == 4 and got["n_vertices"] == 4
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-    # conf untouched when the body raises too (bad column name)
-    try:
-        triangle_count(df, src_col="nope", shuffle_partitions=4)
-    except Exception:
-        pass
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before

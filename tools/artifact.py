@@ -19,6 +19,16 @@ import json
 import os
 
 
+def free_slot(path: str, tag: str) -> str:
+    """First absent ``<name>_<tag><N>.json`` next to ``path``, N from 1:
+    every diverted or displaced file gets its own numbered slot."""
+    base, ext = os.path.splitext(path)
+    n = 1
+    while os.path.exists(f"{base}_{tag}{n}{ext}"):
+        n += 1
+    return f"{base}_{tag}{n}{ext}"
+
+
 def write_artifact(path: str, obj, *, indent: int = 1, **dump_kwargs) -> str:
     """Write ``obj`` as JSON to ``path`` without destroying evidence.
 
@@ -40,11 +50,7 @@ def write_artifact(path: str, obj, *, indent: int = 1, **dump_kwargs) -> str:
                 same = False
             if same:
                 return ""
-            n = 1
-            base, ext = os.path.splitext(path)
-            while os.path.exists(f"{base}_prev{n}{ext}"):
-                n += 1
-            preserved = f"{base}_prev{n}{ext}"
+            preserved = free_slot(path, "prev")
             os.replace(path, preserved)
     with open(path, "w") as fh:
         fh.write(new_text)

@@ -15,14 +15,11 @@ AND run-to-run variance, which the one-shot sweep cannot.
 from __future__ import annotations
 
 import argparse
-import glob
 import os
 import statistics
 import sys
-import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from keyrun import timed, warm
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -44,21 +41,10 @@ def main() -> None:
     spark = get_spark("pm-bench-subset", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # same warm-up as bench.py: JVM/IO path + python worker daemon, on
-    # the smallest table present (a generated sf1 dir holds only the
-    # tables its keys read, not region)
-    warm = min(glob.glob(os.path.join(SF_DIR, "*.parquet")), key=os.path.getsize)
-    spark.read.parquet(warm).count()
-    spark.range(0, cpus, 1, cpus).mapInPandas(lambda it: it, "id long").count()
+    warm(spark, SF_DIR)
 
     for name in args.keys:
-        times = []
-        for _ in range(args.reps):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            df = QUERIES[name](spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            times.append(round(time.perf_counter() - t0, 3))
+        times = [timed(spark, QUERIES[name], SF_DIR)[0] for _ in range(args.reps)]
         print(
             f"{name}: min={min(times):.3f} median={statistics.median(times):.3f} "
             f"reps={times}",

@@ -19,7 +19,7 @@ bracketed by the first-touch + no-op-stage canaries so the artifact
 self-qualifies.  The per-key multiplier cluster/local is the sizing
 number a real deployment needs before committing a 100 TB job.
 
-Writes ``CLUSTER_BENCH_r{N}.json`` via tools/artifact.write_artifact.
+Writes ``CLUSTER_BENCH_r{N}.json`` via keyrun.write_round.
 
 Usage (repo root):
 
@@ -34,11 +34,8 @@ import json
 import os
 import subprocess
 import sys
-import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from keyrun import ROOT, cluster_session, timed, warm, write_round
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 LOCAL_MASTER = "local[32]"
@@ -69,48 +66,18 @@ def run_cycle(master: str, keys: list[str]) -> dict:
     from parquet_merger_spark.queries import QUERIES
     from parquet_merger_spark.session import (
         first_touch_canary_s,
+        get_spark,
         pin_oracle_confs,
-        ship_package,
         stage_latency_canary_s,
     )
 
     if master.startswith("local["):
-        from parquet_merger_spark.session import get_spark
-
         spark = get_spark("pm-cluster-bench", cpus=32)
     else:
-        os.environ["SPARK_GRAFT_CLUSTER"] = master
-        import importlib
-
-        import cluster_correctness
-
-        importlib.reload(cluster_correctness)  # re-read MASTER env
-        spark = cluster_correctness.get_cluster_spark()
-        ship_package(spark)
-        want = int(master.split("[")[1].split(",")[0])
-        deadline = time.time() + 180
-        while (
-            spark.sparkContext._jsc.sc().getExecutorMemoryStatus().size()
-            < want + 1
-        ):
-            if time.time() > deadline:
-                raise RuntimeError("executors never registered")
-            time.sleep(1)
+        spark = cluster_session(master)
     pin_oracle_confs(spark)
     spark.sparkContext.setLogLevel("ERROR")
-
-    # same warm-up as bench.py: JVM/IO path + python-worker spin-up.
-    # Smallest table present, not region by name — the generated sf10
-    # fixture carries only the elephant tables (documents/embeddings/
-    # lineitem)
-    import glob as _glob
-
-    warm = min(
-        _glob.glob(os.path.join(SF_DIR, "*.parquet")), key=os.path.getsize
-    )
-    spark.read.parquet(warm).count()
-    n = spark.sparkContext.defaultParallelism
-    spark.range(0, n, 1, n).mapInPandas(lambda it: it, "id long").count()
+    warm(spark, SF_DIR)
 
     out: dict = {
         "master": master,
@@ -119,11 +86,7 @@ def run_cycle(master: str, keys: list[str]) -> dict:
         "keys": {},
     }
     for name in keys:
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()
-        out["keys"][name] = round(time.perf_counter() - t0, 3)
+        out["keys"][name] = timed(spark, QUERIES[name], SF_DIR)[0]
     out["canary_after"] = first_touch_canary_s()
     out["stage_after"] = stage_latency_canary_s(spark)
     spark.stop()
@@ -192,9 +155,6 @@ def main() -> None:
             )
         best[key] = row
 
-    from parquet_merger_spark.oracle import next_round
-
-    n = next_round(ROOT)
     mults = sorted(
         r["multiplier"] for r in best.values() if "multiplier" in r
     )
@@ -213,18 +173,8 @@ def main() -> None:
         ),
         "cycles": cycles,
     }
-    from artifact import write_artifact
-
-    path = os.environ.get("SPARK_GRAFT_CLUSTER_BENCH_OUT") or os.path.join(
-        ROOT, f"CLUSTER_BENCH_r{n:02d}.json"
-    )
-    moved = write_artifact(path, artifact, indent=1)
-    if moved:
-        print(f"# previous artifact preserved at {moved}")
-    print(
-        f"{path}: median local->cluster multiplier "
-        f"{artifact['median_multiplier']}"
-    )
+    path = write_round("CLUSTER_BENCH", artifact)
+    print(f"{path}: median local->cluster multiplier {artifact['median_multiplier']}")
 
 
 if __name__ == "__main__":

@@ -25,67 +25,16 @@ Usage (repo root):
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from keyrun import cluster_session, write_round
 
-from parquet_merger_spark.oracle import canon_hash as _canon_hash  # noqa: E402
-from parquet_merger_spark.oracle import register_views  # noqa: E402
+from parquet_merger_spark.oracle import compare_frames, register_views
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
 MASTER = os.environ.get("SPARK_GRAFT_CLUSTER", "local-cluster[2,8,8192]")
-
-
-def get_cluster_spark():
-    """A session on real multi-JVM executors with the engine's standard
-    SQL confs (mirrors ``session.get_spark`` where the conf is not
-    local-mode-specific).  ``SPARK_HOME``/``PYSPARK_PYTHON`` must point
-    at the pip-installed pyspark and the current interpreter so worker
-    JVMs and their python daemons launch from the same install."""
-    import pyspark
-    from pyspark.sql import SparkSession
-
-    os.environ.setdefault("SPARK_HOME", os.path.dirname(pyspark.__file__))
-    os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
-    os.environ.setdefault("PYSPARK_DRIVER_PYTHON", sys.executable)
-    # total executor cores across the cluster drives the shuffle default
-    import re
-
-    m = re.match(r"local-cluster\[(\d+),(\d+),(\d+)\]", MASTER)
-    n_exec, cores, _mem = (int(g) for g in m.groups()) if m else (2, 8, 8192)
-    return (
-        SparkSession.builder.master(MASTER)
-        .appName("pm-cluster-correctness")
-        # the master string's third number sizes the WORKER's allotment,
-        # NOT the executor JVM: without this conf the executor heap is
-        # Spark's 1g default (verified empirically r10 — every executor
-        # reported ~434MB unified memory under local-cluster[2,16,16384]).
-        # Request the full worker allotment so the label means what it
-        # says.  Historical note: the r09 cluster sweeps therefore ran
-        # 1 GiB executor heaps — correctness held regardless.
-        .config("spark.executor.memory", f"{_mem}m")
-        .config("spark.sql.shuffle.partitions", str(n_exec * cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "6g")
-        # executor-side spill-reader fix from MEM_SCALING_r08 applies to
-        # every JVM that aggregates, not just a local-mode driver
-        .config("spark.unsafe.sorter.spill.read.ahead.enabled", "false")
-        .config(
-            "spark.executor.extraJavaOptions",
-            "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=64",
-        )
-        .getOrCreate()
-    )
 
 
 def main() -> None:
@@ -94,15 +43,11 @@ def main() -> None:
     from parquet_merger_spark.queries import ORACLE_SQL, QUERIES
     from parquet_merger_spark.session import pin_oracle_confs
 
-    from parquet_merger_spark.session import ship_package
-
     only = set(sys.argv[1:])
-    spark = pin_oracle_confs(get_cluster_spark())
+    # get_spark ships the package to the executors: module-level
+    # applyInPandas/mapInPandas kernels pickle by reference
+    spark = pin_oracle_confs(cluster_session(MASTER))
     spark.sparkContext.setLogLevel("ERROR")
-    # executors must be able to import the package: module-level
-    # applyInPandas/mapInPandas kernels pickle by reference (see
-    # session.ship_package — 7 keys failed without this)
-    ship_package(spark)
     # optional: exercise the RELIABLE checkpoint path (barrier.materialize
     # switches every iterative operator's lineage cut from localCheckpoint
     # to FS checkpoint when a dir is set — the executor-loss-safe mode)
@@ -110,24 +55,10 @@ def main() -> None:
     if ckpt:
         spark.sparkContext.setCheckpointDir(ckpt)
         print(f"# reliable checkpoints -> {ckpt}")
-    # the artifact must PROVE multi-JVM execution: wait until every
-    # executor JVM has registered its block manager (the count includes
-    # the driver's), and hard-fail rather than record a sweep that
-    # silently ran driver-only or under-provisioned
-    import re as _re
-
-    want = int((_re.match(r"local-cluster\[(\d+),", MASTER) or [None, "2"])[1])
-    deadline = time.time() + 120
-    while True:
-        n_execs = spark.sparkContext._jsc.sc().getExecutorMemoryStatus().size()
-        if n_execs >= want + 1:
-            break
-        if time.time() > deadline:
-            raise RuntimeError(
-                f"only {n_execs} block managers (incl driver) registered "
-                f"after 120s; wanted {want} executor JVMs — not multi-JVM"
-            )
-        time.sleep(2)
+    # the artifact must PROVE multi-JVM execution (cluster_session
+    # waits for every executor's block manager; the count includes the
+    # driver's)
+    n_execs = spark.sparkContext._jsc.sc().getExecutorMemoryStatus().size()
     print(f"# master={MASTER}  block managers (incl driver)={n_execs}")
     con = duckdb.connect()
     register_views(con, SF_DIR)
@@ -146,15 +77,7 @@ def main() -> None:
             sdf = QUERIES[name](spark, SF_DIR).toPandas()
             row["spark_rows"] = int(len(sdf))
             if name in ORACLE_SQL:
-                ddf = con.execute(ORACLE_SQL[name]).df()
-                row["oracle_rows"] = int(len(ddf))
-                row["rows_match"] = len(sdf) == len(ddf)
-                row["schema_match"] = sorted(sdf.columns) == sorted(ddf.columns)
-                row["hash_match"] = (
-                    row["rows_match"]
-                    and row["schema_match"]
-                    and _canon_hash(sdf) == _canon_hash(ddf)
-                )
+                row.update(compare_frames(sdf, con.execute(ORACLE_SQL[name]).df()))
             else:
                 row["err"] = "no_oracle"
         except Exception as ex:  # noqa: BLE001 — record, keep sweeping
@@ -168,9 +91,6 @@ def main() -> None:
         print(f"{name}: {status} ({row['spark_rows']} rows, {row['sec']}s)",
               flush=True)
 
-    from parquet_merger_spark.oracle import next_round
-
-    n = next_round(ROOT)
     result = {
         "master": MASTER,
         "sf_dir": SF_DIR,
@@ -178,14 +98,7 @@ def main() -> None:
         "wall_s": round(time.time() - t_start, 1),
         "keys": out,
     }
-    path = os.environ.get("SPARK_GRAFT_CLUSTER_OUT") or os.path.join(
-        ROOT, f"CLUSTER_CORRECTNESS_r{n:02d}.json"
-    )
-    from artifact import write_artifact
-
-    moved = write_artifact(path, result, indent=1)
-    if moved:
-        print(f"# previous artifact preserved at {moved}")
+    path = write_round("CLUSTER_CORRECTNESS", result)
     n_pass = sum(1 for r in out.values() if r["hash_match"])
     n_ro = sum(1 for r in out.values() if r["err"] == "no_oracle")
     n_fail = len(out) - n_pass - n_ro

@@ -27,13 +27,9 @@ Run from the repo root:  python tools/core_scaling.py
 
 from __future__ import annotations
 
-import json
 import os
-import sys
-import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from keyrun import timed, warm, write_round
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CORES = (4, 16, 32)
@@ -90,19 +86,13 @@ def main() -> None:
         for n in CORES:
             spark = get_spark(f"pm-core-scaling-{n}", cpus=n)
             spark.sparkContext.setLogLevel("ERROR")
-            # bench.py's warm-up: fault IO path + fork all python workers
-            spark.read.parquet(os.path.join(SF_DIR, "region.parquet")).count()
-            spark.range(0, n, 1, n).mapInPandas(lambda it: it, "id long").count()
+            warm(spark, SF_DIR)
             for key in PANEL:
-                best = walls[key][str(n)]
-                for _ in range(reps):  # best-of-reps: drop transient noise
-                    spark.catalog.clearCache()
-                    t0 = time.perf_counter()
-                    QUERIES[key](spark, SF_DIR).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    best = min(best, time.perf_counter() - t0)
-                walls[key][str(n)] = round(best, 3)
+                # best-of-reps: drop transient noise
+                walls[key][str(n)] = min(
+                    walls[key][str(n)],
+                    *(timed(spark, QUERIES[key], SF_DIR)[0] for _ in range(reps)),
+                )
             spark.stop()
             # per-session canary: a fault-dominated window localizes to
             # the session it hit instead of silently poisoning the artifact
@@ -137,8 +127,6 @@ def main() -> None:
             ),
         }
 
-    from parquet_merger_spark.oracle import next_round
-
     artifact = {
         "sf_dir": SF_DIR,
         "cores": list(CORES),
@@ -152,14 +140,7 @@ def main() -> None:
         ),
         "keys": out,
     }
-    n = next_round(ROOT)
-    path = os.path.join(ROOT, f"CORE_SCALING_r{n:02d}.json")
-    from artifact import write_artifact
-
-    moved = write_artifact(path, artifact, indent=1)
-    if moved:
-        print(f"# previous artifact preserved at {moved}")
-    print(f"\n{path} written")
+    print(f"\n{write_round('CORE_SCALING', artifact)} written")
 
 
 if __name__ == "__main__":

@@ -15,6 +15,8 @@ import os
 import re
 import sys
 
+from artifact import free_slot
+
 
 def merge(repo_root: str) -> dict:
     cum: dict[str, dict] = {}
@@ -59,15 +61,10 @@ def write_cum(root: str, cum: dict) -> str:
             _round_n(cum[k]) < _round_n(old[k]) for k in old if k in cum
         )
         if degraded:
-            # same _prev<N>.json scheme as tools/artifact.write_artifact
-            base, ext = os.path.splitext(out)
-            n = 1
-            while os.path.exists(f"{base}_prev{n}{ext}"):
-                n += 1
-            os.replace(out, f"{base}_prev{n}{ext}")
+            preserved = free_slot(out, "prev")
+            os.replace(out, preserved)
             print(
-                f"# cum coverage would degrade; previous preserved at "
-                f"{base}_prev{n}{ext}",
+                f"# cum coverage would degrade; previous preserved at {preserved}",
                 file=sys.stderr,
             )
     with open(out, "w") as fh:

@@ -32,14 +32,12 @@ prints, so a subset never stands in for the full sweep.
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from keyrun import write_round
 
-from parquet_merger_spark.oracle import canon_hash  # noqa: E402
+from parquet_merger_spark.oracle import canon_hash
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
 
@@ -95,25 +93,7 @@ def main() -> None:
         status = "OK" if row["match"] else ("ERR" if row["err"] else "MISMATCH")
         print(f"{name}: {status} ({row['rows']})", flush=True)
 
-    from parquet_merger_spark.oracle import next_round
-
-    n = next_round(ROOT)
-    path = os.path.join(ROOT, f"DETERMINISM_r{n:02d}.json")
-    if only and not os.path.exists(path):
-        # triage mode with no full sweep to merge into: a subset written
-        # under the full-sweep name would pass for one, so only print
-        path = "(key subset, not written)"
-    else:
-        if only:  # triage mode: merge into the artifact
-            with open(path) as fh:
-                merged = json.load(fh)
-            merged.update(out)
-            out = merged
-        from artifact import write_artifact
-
-        moved = write_artifact(path, out, indent=1)
-        if moved:
-            print(f"# previous artifact preserved at {moved}")
+    path = write_round("DETERMINISM", out, subset=bool(only))
     n_ok = sum(1 for r in out.values() if r["match"])
     print(f"\n{path}: {n_ok} deterministic, {len(out) - n_ok} flagged")
     if n_mismatch:

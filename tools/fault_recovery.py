@@ -33,7 +33,7 @@ query's checkpointLocation, and the arm proves the stream keys' wiring
 (file-source replay, 4 state partitions, memory sink) delivers
 executor-loss recovery with the exactly-once oracle-matching result.
 
-Writes ``FAULT_RECOVERY_r{N}.json`` through tools/artifact.write_artifact.
+Writes ``FAULT_RECOVERY_r{N}.json`` through keyrun.write_round.
 
 Usage (repo root):
 
@@ -54,9 +54,7 @@ import tempfile
 import threading
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from keyrun import ROOT, cluster_session, write_round
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
 DEFAULT_KEYS = ["dedup_clusters", "pagerank"]
@@ -90,20 +88,13 @@ def run_arm(arm: str, key: str, min_barriers: int, out_path: str) -> None:
     """Subprocess body: one cluster session, one kill, one verdict."""
     import duckdb
 
-    from cluster_correctness import get_cluster_spark
-    from parquet_merger_spark.oracle import canon_hash, register_views
+    from cluster_correctness import MASTER
+    from parquet_merger_spark.oracle import compare_frames, register_views
     from parquet_merger_spark.queries import ORACLE_SQL, QUERIES
-    from parquet_merger_spark.session import pin_oracle_confs, ship_package
+    from parquet_merger_spark.session import pin_oracle_confs
 
-    spark = pin_oracle_confs(get_cluster_spark())
+    spark = pin_oracle_confs(cluster_session(MASTER))
     spark.sparkContext.setLogLevel("ERROR")
-    ship_package(spark)
-    want = 2
-    deadline = time.time() + 120
-    while spark.sparkContext._jsc.sc().getExecutorMemoryStatus().size() < want + 1:
-        if time.time() > deadline:
-            raise RuntimeError("executors never registered")
-        time.sleep(1)
 
     ckpt = None
     if arm == "recovery":
@@ -189,13 +180,9 @@ def run_arm(arm: str, key: str, min_barriers: int, out_path: str) -> None:
         result["rows"] = int(len(pdf))
         con = duckdb.connect()
         register_views(con, SF_DIR)
-        odf = con.execute(ORACLE_SQL[key]).df()
-        result["oracle_rows"] = int(len(odf))
-        result["hash_match"] = bool(
-            len(pdf) == len(odf)
-            and sorted(pdf.columns) == sorted(odf.columns)
-            and canon_hash(pdf) == canon_hash(odf)
-        )
+        cmp = compare_frames(pdf, con.execute(ORACLE_SQL[key]).df())
+        result["oracle_rows"] = cmp["oracle_rows"]
+        result["hash_match"] = cmp["hash_match"]
     except Exception as ex:  # noqa: BLE001 — the control arm EXPECTS this
         result["completed"] = False
         result["failure_mode"] = f"{type(ex).__name__}: {ex}"[:600]
@@ -307,9 +294,6 @@ def main() -> None:
             flush=True,
         )
 
-    from parquet_merger_spark.oracle import next_round
-
-    n = next_round(ROOT)
     ok_recovery = [
         r for r in runs
         if r["arm"] == "recovery" and r.get("killed") and r.get("hash_match")
@@ -336,12 +320,7 @@ def main() -> None:
         "stream_recovery_keys": sorted({r["key"] for r in ok_stream}),
         "runs": runs,
     }
-    from artifact import write_artifact
-
-    path = os.path.join(ROOT, f"FAULT_RECOVERY_r{n:02d}.json")
-    moved = write_artifact(path, artifact, indent=1)
-    if moved:
-        print(f"# previous artifact preserved at {moved}")
+    path = write_round("FAULT_RECOVERY", artifact)
     print(f"{path}: recovery-proven={artifact['recovery_proven_keys']} "
           f"control-died={artifact['control_death_keys']} "
           f"stream-recovered={artifact['stream_recovery_keys']}")

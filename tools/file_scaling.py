@@ -22,14 +22,11 @@ Writes ``FILES_SCALING_r{NN}.json``.  Run: python tools/file_scaling.py
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from keyrun import ROOT, write_round
 
 SIZES = tuple(
     int(x)
@@ -225,16 +222,7 @@ def main() -> None:
     out["host_canary_s"]["after"] = first_touch_canary_s()
     out["canary_ok"] = bool(max(out["host_canary_s"].values()) < 1.0)
 
-    from parquet_merger_spark.oracle import next_round
-
-    n_round = next_round(ROOT)
-    path = os.path.join(ROOT, f"FILES_SCALING_r{n_round:02d}.json")
-    from artifact import write_artifact
-
-    moved = write_artifact(path, out, indent=1)
-    if moved:
-        print(f"# previous artifact preserved at {moved}")
-    print(f"\nwrote {path}")
+    print(f"\nwrote {write_round('FILES_SCALING', out)}")
 
 
 if __name__ == "__main__":

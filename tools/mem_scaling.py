@@ -37,11 +37,9 @@ import json
 import os
 import subprocess
 import sys
-import time
 import urllib.request
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from keyrun import ROOT, timed, warm, write_round
 
 SF1 = os.path.join(ROOT, ".localdata", "sf1")
 SF10 = os.path.join(ROOT, ".localdata", "sf10")
@@ -104,17 +102,8 @@ def _worker(key: str, sf_dir: str, heap: str) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     out = {"key": key, "heap": heap, "sf_dir": os.path.basename(sf_dir)}
     try:
-        # bench.py's warm-up: fault IO path + fork all python workers
-        # (sf10 carries only the elephant tables — warm from sf1's region)
-        warm = os.path.join(sf_dir, "region.parquet")
-        if not os.path.exists(warm):
-            warm = os.path.join(SF1, "region.parquet")
-        spark.read.parquet(warm).count()
-        spark.range(0, 32, 1, 32).mapInPandas(lambda it: it, "id long").count()
-
-        t0 = time.perf_counter()
-        QUERIES[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        out["wall_s"] = round(time.perf_counter() - t0, 3)
+        warm(spark, sf_dir)
+        out["wall_s"] = timed(spark, QUERIES[key], sf_dir)[0]
 
         ui = spark.sparkContext.uiWebUrl  # e.g. http://host:4040
         app = spark.sparkContext.applicationId
@@ -163,7 +152,6 @@ def _run_one(key: str, sf_dir: str, heap: str) -> dict:
 
 
 def main() -> None:
-    from parquet_merger_spark.oracle import next_round
     from parquet_merger_spark.session import first_touch_canary_s
 
     result: dict = {"configs": [], "panel": {}}
@@ -193,14 +181,7 @@ def main() -> None:
             block[key] = rows
         block["_canary_s"] = {"before": canary0, "after": first_touch_canary_s()}
 
-    nn = next_round(ROOT)
-    path = os.path.join(ROOT, f"MEM_SCALING_r{nn:02d}.json")
-    from artifact import write_artifact
-
-    moved = write_artifact(path, result, indent=1)
-    if moved:
-        print(f"# previous artifact preserved at {moved}")
-    print(f"wrote {path}")
+    print(f"wrote {write_round('MEM_SCALING', result)}")
 
 
 if __name__ == "__main__":

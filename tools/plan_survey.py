@@ -14,12 +14,10 @@ Run from the repo root:  python tools/plan_survey.py   (sf0.01)
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from keyrun import write_round
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
 
@@ -52,15 +50,7 @@ def main() -> None:
             out[name] = {"err": f"{type(ex).__name__}: {ex}"[:200]}
         print(name, "ok" if "err" not in out[name] else out[name]["err"], flush=True)
 
-    from parquet_merger_spark.oracle import next_round
-
-    n = next_round(ROOT)
-    path = os.path.join(ROOT, f"PLANS_r{n:02d}.json")
-    from artifact import write_artifact
-
-    moved = write_artifact(path, out, indent=1, sort_keys=True)
-    if moved:
-        print(f"# previous artifact preserved at {moved}")
+    path = write_round("PLANS", out, sort_keys=True)
     bad = [k for k, v in out.items() if "err" in v]
     cart = [
         k for k, v in out.items()

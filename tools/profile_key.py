@@ -13,15 +13,12 @@ touching anything.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import sys
 import tempfile
-import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from keyrun import timed, warm
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -51,20 +48,12 @@ def main() -> None:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    # the smallest table present: a generated sf1 dir has no region
-    warm = min(glob.glob(os.path.join(SF_DIR, "*.parquet")), key=os.path.getsize)
-    spark.read.parquet(warm).count()
-    spark.range(0, cpus, 1, cpus).mapInPandas(lambda it: it, "id long").count()
+    warm(spark, SF_DIR)
 
     sc = spark.sparkContext
     for name in keys:
-        spark.catalog.clearCache()
         sc.setJobDescription(f"profile:{name}")
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, SF_DIR)
-        t_build = time.perf_counter() - t0
-        df.write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
+        wall, t_build = timed(spark, QUERIES[name], SF_DIR)
         sc.setJobDescription(None)
         print(f"\n=== {name}: wall={wall:.3f}s (builder returned at {t_build:.3f}s)")
         _report(evdir, sc.applicationId, t0_wall=wall)

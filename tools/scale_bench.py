@@ -19,14 +19,11 @@ Run from the repo root:  python tools/scale_bench.py [reps]
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import sys
-import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from keyrun import ROOT, timed, warm, write_round
 
 KEYS = [
     # r07 panel (r06 verdict asks #1/#5/#7).  The graph/dedup/stats
@@ -116,21 +113,11 @@ def main() -> None:
     reps = int(args[0]) if args else 2
     spark = get_spark("pm-scale-bench", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
-    # warm JVM + python workers (same rationale as bench.py)
-    spark.read.parquet(os.path.join(SF_SMALL, "region.parquet")).count()
-    spark.range(0, 32, 1, 32).mapInPandas(lambda it: it, "id long").count()
+    warm(spark, SF_SMALL)
 
     def best(name: str, sf_dir: str) -> float:
         fn = SPECIAL.get(name) or QUERIES[name]
-        t_best = math.inf
-        for _ in range(reps):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            t_best = min(t_best, time.perf_counter() - t0)
-        return round(t_best, 3)
+        return min(timed(spark, fn, sf_dir)[0] for _ in range(reps))
 
     from parquet_merger_spark.session import first_touch_canary_s
 
@@ -175,16 +162,7 @@ def main() -> None:
 
     out["_host_canary_s"]["after"] = first_touch_canary_s()
 
-    from parquet_merger_spark.oracle import next_round
-
-    n = next_round(ROOT)
-    path = os.path.join(ROOT, f"SCALING_r{n:02d}.json")
-    from artifact import write_artifact
-
-    moved = write_artifact(path, out, indent=1)
-    if moved:
-        print(f"# previous artifact preserved at {moved}")
-    print(f"\nwrote {path}")
+    print(f"\nwrote {write_round('SCALING', out)}")
 
 
 if __name__ == "__main__":

@@ -20,13 +20,10 @@ Run from the repo root:  python tools/streaming_latency.py
 
 from __future__ import annotations
 
-import json
 import os
-import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from keyrun import write_round
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
 
@@ -130,12 +127,6 @@ def main() -> None:
         finally:
             EV.correlate_streams = orig_correlate
 
-    from parquet_merger_spark.oracle import next_round
-
-    n = next_round(ROOT)
-    path = os.path.join(ROOT, f"STREAM_LATENCY_r{n:02d}.json")
-    from artifact import write_artifact
-
     result = {
         "host_canary_s": {
             "before": canary_before,
@@ -152,9 +143,7 @@ def main() -> None:
         max(c["before"], c["after"]) < 0.3
         and max(c["stage_before"], c["stage_after"]) < 0.15
     )
-    moved = write_artifact(path, result, indent=1)
-    if moved:
-        print(f"# previous artifact preserved at {moved}")
+    path = write_round("STREAM_LATENCY", result)
     print(f"\nwrote {path} (strict={c['canary_strict_ok']})")
 
 
